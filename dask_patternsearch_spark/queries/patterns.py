@@ -93,9 +93,9 @@ def pattern_search_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pattern_search_pipelined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Async-approximation mode (the reference's speculative submission,
-    search.py:240-250,299-324): two poll rounds in flight as concurrent
-    Spark jobs via ``AsyncSparkEvaluator``.  Same optimum, same contraction
-    gate; driver fill and cluster evaluation overlap."""
+    search.py:240-250,299-324): two poll rounds are filled speculatively
+    and evaluated as one synchronous Spark job.  Same optimum, same
+    contraction gate; about half the jobs of one job per round."""
 
     def sphere_vec(xs: np.ndarray) -> np.ndarray:
         return (xs * xs).sum(axis=1)
@@ -149,8 +149,8 @@ def pattern_search_sphere_100d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pattern_search_100d_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aspirational 100-dim axis ON THE EXECUTOR PATH (reference
     search.py:55-61 x clients.py's distributed client): 100-d sphere with
-    cluster-side vectorized evaluation and two poll rounds in flight
-    (``pipeline_depth=2``, the async-approximation mode).  Coarse
+    cluster-side vectorized evaluation and two speculative poll rounds per
+    Spark job (``pipeline_depth=2``, the async-approximation mode).  Coarse
     stopratio keeps the round count small -- the datapoint is round-count
     scaling at dims=100 on the distributed evaluator, not the full
     convergence ledger (pattern_search_sphere_100d covers that axis
@@ -785,7 +785,7 @@ def pattern_search_replay_pipelined(spark: SparkSession, sf_dir: str) -> DataFra
     covered only by convergence properties.  With ``randomize=False`` and
     ``pipeline_depth=2`` the loop is a pure function of the config: every
     iteration fills round k+1 from the CURRENT epoch while round k is
-    still in flight, then drains round k and applies accept/contract one
+    still unprocessed, then drains round k and applies accept/contract one
     round LATE.  ``_replay_pipelined_sql`` models exactly that lag
     (pending round in the recursion state, acceptance candidates drawn
     from the drained round with their own fill-time parents driving the
@@ -808,11 +808,11 @@ def pattern_search_replay_pipelined(spark: SparkSession, sf_dir: str) -> DataFra
 def _replay_pipelined_sql(x0: tuple, stepsize: float, cost_expr: str,
                           max_halvings: int = 7) -> str:
     """DuckDB recursive-CTE interpreter of the ``pipeline_depth=2``
-    ``randomize=False`` loop (search.py:578-744 async path).
+    ``randomize=False`` loop (search.py:543-782).
 
     One recursion step == one loop iteration: (1) fill the next round
     from the CURRENT epoch state (scan-from-zero with the drained+pending
-    keys as the memo -- ``inflight_keys`` dedup included); (2) drain the
+    keys as the memo -- ``pending_keys`` dedup included); (2) drain the
     PENDING round (one-round lag): append its dup=1 rows to the ledger
     and take its best improving row -- min (halvings, cost, fill order)
     vs the CURRENT incumbent cost -- as the acceptance candidate; with
@@ -827,10 +827,10 @@ def _replay_pipelined_sql(x0: tuple, stepsize: float, cost_expr: str,
     incumbent and does not survive the lag).  The contraction gate's
     poll set reduces to: the epoch's first fill (the only fill that can
     take stencil indices <= 2*dims) has not yet drained; poll trials
-    already in flight from the previous epoch clear within the same
+    still pending from the previous epoch clear within the same
     iteration because the drain runs before the decision.  On finish the
     still-pending round drains into the ledger (the engine's post-loop
-    inflight drain) and the ledger-min fold runs as in the serial
+    final drain) and the ledger-min fold runs as in the serial
     replay.  Exactness argument identical to ``_replay_sql``."""
     inv_g = 2.0 ** max_halvings / stepsize
     g = stepsize / 2.0 ** max_halvings

@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import math
 from collections import deque
-from concurrent.futures import ThreadPoolExecutor
 from time import time
 
 import numpy as np
@@ -92,10 +91,15 @@ class TrialPoint:
 
 class SearchResults(dict):
     """``dict[TrialPoint, float]`` ledger with a DataFrame exporter.
+
     ``rounds`` counts the poll rounds the search processed (an observable
-    for the distributed round-count scaling datapoint)."""
+    for the distributed round-count scaling datapoint); ``jobs`` counts
+    the evaluator calls it made -- one Spark job per call with a Spark
+    evaluator, so ``jobs`` is ``rounds`` at ``pipeline_depth=1`` and about
+    ``rounds / pipeline_depth`` when rounds are fused."""
 
     rounds: int = 0
+    jobs: int = 0
 
     def to_spark(self, spark, cost_kind: bool = False):
         """Export the ledger as a DataFrame (SURVEY.md section 1.1 schema).
@@ -262,24 +266,12 @@ class SparkEvaluator:
 
 
 class AsyncSparkEvaluator(SparkEvaluator):
-    """Pipelined distributed evaluation: ``submit`` dispatches one
-    single-stage job from a pool thread and returns a future,
-    approximating the reference's async submit/next_batch pipelining
-    (``clients.py:13,23-24``; ``search.py:240-250,299-324``) on a
-    barrier execution model.
+    """Compatibility name for :class:`SparkEvaluator`.
 
-    ``search(pipeline_depth=k)`` fills k speculative rounds and submits
-    them as ONE fused job (round-13 verdict #5): speculative rounds are
-    filled without each other's results by construction, so fusing
-    their evaluation into one job leaves every round's candidate set --
-    and the ledger -- bit-identical while cutting the per-round
-    job-launch floor to 1/k.  Within a fused job all rounds' tasks
-    schedule together, so a straggler in round N's slice is backfilled
-    by round N+1's tasks exactly as separate concurrent jobs would.
-    Results still drain in submission order (a Spark job is a barrier),
-    which is the one semantic narrowing vs the reference's
-    completion-order drain; the greedy-accept policy is identical either
-    way (reference flags it replaceable, ``search.py:326-329``).
+    ``search(pipeline_depth=k)`` fuses k speculative rounds into one
+    synchronous ``evaluate`` call with any evaluator, so this class adds
+    no behaviour.  ``max_inflight`` is accepted for backward
+    compatibility and ignored.
     """
 
     def __init__(
@@ -290,12 +282,6 @@ class AsyncSparkEvaluator(SparkEvaluator):
         max_inflight: int = 2,
     ):
         super().__init__(spark, vectorize=vectorize, batchsize=batchsize)
-        self.max_inflight = max_inflight
-        self._pool = ThreadPoolExecutor(max_workers=max_inflight)
-
-    def submit(self, func, points: list[np.ndarray], args: tuple):
-        """Dispatch one evaluation round; returns a Future of list[float]."""
-        return self._pool.submit(self.evaluate, func, points, args)
 
 
 def _chunked_shuffle(step_iter, dims: int, rng: np.random.Generator):
@@ -403,17 +389,18 @@ def search(
     max_time : wall-clock budget in seconds (stop submitting after).
     integer_dimensions : indices of dimensions constrained to integers.
     batchsize / vectorize : evaluation batching, as in the reference.
-    evaluator : explicit evaluator (overrides ``spark``).
-    pipeline_depth : speculative poll rounds evaluated per Spark job
-        (``AsyncSparkEvaluator``).  1 = strict batch-synchronous rounds;
-        2+ approximates the reference's async speculative submission
-        (``search.py:240-250,299-324``): the next ``pipeline_depth - 1``
-        rounds are filled speculatively and the chunk rides ONE fused
-        job, so the per-round job-launch floor drops to 1/depth at an
-        unchanged search trace (each round is still filled and processed
-        in the same interleaving as one-job-per-round submission).  The
-        contraction gate stays exact -- a step never halves while any
-        poll point is unevaluated or any round is unprocessed.
+    evaluator : explicit evaluator (overrides ``spark``); any object with
+        ``evaluate(func, points, args) -> list[float]``.
+    pipeline_depth : speculative poll rounds evaluated per evaluator call
+        (one Spark job with a session).  1 = strict batch-synchronous
+        rounds; k > 1 approximates the reference's async speculative
+        submission (``search.py:240-250,299-324``): each round is filled
+        before the k - 1 rounds ahead of it are processed, k such rounds
+        are evaluated together as ONE synchronous job, and they are then
+        processed one at a time, oldest first.  The job-launch cost per
+        round drops to about 1/k.  The contraction gate stays exact -- a
+        step never halves while any poll point is unevaluated or any
+        round is unprocessed.
     client / max_queue_size / min_queue_size : drop-in aliases for the
         reference's signature (``search.py:48-51``).  A SparkSession
         passed as ``client`` behaves as ``spark=``; ``max_queue_size``
@@ -495,23 +482,10 @@ def search(
     rng = np.random.default_rng(seed)
 
     if evaluator is None:
-        if spark is not None and pipeline_depth > 1:
-            evaluator = AsyncSparkEvaluator(
-                spark,
-                vectorize=vectorize,
-                batchsize=batchsize,
-                max_inflight=pipeline_depth,
-            )
-        elif spark is not None:
+        if spark is not None:
             evaluator = SparkEvaluator(spark, vectorize=vectorize, batchsize=batchsize)
         else:
             evaluator = LocalEvaluator(vectorize=vectorize)
-    use_async = pipeline_depth > 1
-    if use_async and not hasattr(evaluator, "submit"):
-        raise ValueError(
-            "pipeline_depth > 1 needs a submit-capable evaluator "
-            "(AsyncSparkEvaluator); serial mode is inherently synchronous"
-        )
 
     if round_size is None:
         round_size = 3 * dims
@@ -566,48 +540,32 @@ def search(
     carried_key = None      # (halvings, cost) acceptance key of carried_best
     finished = False
 
-    # async pipelining state (round-FUSED, round-13 verdict #5): filled
-    # rounds accumulate into a chunk of up to ``pipeline_depth`` rounds
-    # and ride ONE Spark job per chunk (the per-round fill/process
-    # interleaving below is unchanged, so every round's candidate set --
-    # and hence the ledger -- is bit-identical to one-job-per-round
-    # submission; only the job count drops).  pending_chunk holds filled
-    # rounds awaiting submission, inflight holds submitted chunks,
-    # buffered holds evaluated rounds awaiting processing.
-    pending_chunk: list = []    # [candidates, ...] filled, not submitted
-    inflight: deque = deque()   # ([candidates, ...], Future) per chunk
+    # round fusing: filled rounds accumulate into a chunk of up to
+    # ``pipeline_depth`` rounds that is evaluated as ONE job.  Each round
+    # is still filled and processed in the same interleaving as with one
+    # job per round, so every round's candidate set -- and hence the
+    # ledger -- does not depend on the fusing; only the job count drops.
+    pending_chunk: list = []    # [candidates, ...] filled, not evaluated
     buffered: deque = deque()   # (candidates, costs) evaluated rounds
-    inflight_keys: set = set()  # TrialPoints awaiting results (dedup memo)
-    n_jobs = 0                  # evaluation jobs dispatched (sync + async)
-
-    def submit_chunk():
-        nonlocal n_jobs
-        if not pending_chunk:
-            return
-        rounds_list = list(pending_chunk)
-        pending_chunk.clear()
-        pts = [c.point for cand in rounds_list for c in cand]
-        n_jobs += 1
-        inflight.append((rounds_list, evaluator.submit(func, pts, args)))
+    pending_keys: set = set()   # TrialPoints awaiting results (dedup memo)
 
     def unprocessed_rounds() -> int:
-        return (len(pending_chunk) + len(buffered)
-                + sum(len(rl) for rl, _ in inflight))
+        return len(pending_chunk) + len(buffered)
 
     def drain_one_round():
-        """Process exactly ONE round, in submission order (mirrors the
-        old pop-oldest semantics; chunk results split back per round)."""
+        """Process exactly ONE round, oldest first; when none is evaluated
+        yet, evaluate the whole pending chunk in one call and split its
+        costs back per round."""
         if not buffered:
-            if not inflight:
-                submit_chunk()  # partial chunk: nothing else pending
-            rounds_list, fut = inflight.popleft()
-            costs_all = fut.result()
+            costs = evaluator.evaluate(
+                func, [c.point for cand in pending_chunk for c in cand], args)
+            results.jobs += 1
             off = 0
-            for cand in rounds_list:
-                buffered.append((cand, costs_all[off:off + len(cand)]))
+            for cand in pending_chunk:
+                buffered.append((cand, costs[off:off + len(cand)]))
                 off += len(cand)
-        cand0, costs0 = buffered.popleft()
-        process_round(cand0, costs0)
+            pending_chunk.clear()
+        process_round(*buffered.popleft())
 
     # periodic ledger checkpoint state (see ledger_path in the docstring)
     ledger_buf: list = []
@@ -633,10 +591,9 @@ def search(
         ledger_buf.clear()
 
     def process_round(cand, costs):
-        """Record one round's results and update the acceptance candidate
-        (shared by the sync path and the async drain)."""
+        """Record one round's results and update the acceptance candidate."""
         nonlocal carried_best, carried_key
-        results.rounds = getattr(results, "rounds", 0) + 1
+        results.rounds += 1
         if ledger_path is not None:
             for tp, cost in zip(cand, costs):
                 c = float(cost)
@@ -651,7 +608,7 @@ def search(
             tp.stop_time = now
             tp.result = cost
             results[tp] = cost
-            inflight_keys.discard(tp)
+            pending_keys.discard(tp)
             epoch["poll"].discard(tp)
             epoch["added"] += 1
             # Acceptance candidate policy: among improving points prefer
@@ -723,7 +680,7 @@ def search(
             known = results.get(tp, False)
             if epoch["index"] <= 2 * dims and known is False:
                 epoch["poll"].add(tp)
-            if known is False and tp not in inflight_keys:
+            if known is False and tp not in pending_keys:
                 tp.parent = incumbent
                 tp.start_time = time()
                 candidates.append(tp)
@@ -747,13 +704,10 @@ def search(
         if epoch["index"] >= max_stencil_size:
             epoch["exhausted"] = True
 
-        # ---- budget trim (max_tasks semantics; in-flight points count) ------
+        # ---- budget trim (max_tasks semantics; unprocessed points count) ---
         if point_budget is not None:
-            pending = (
-                sum(len(c) for c in pending_chunk)
-                + sum(len(c) for c, _ in buffered)
-                + sum(len(c) for rl, _ in inflight for c in rl)
-            )
+            pending = (sum(len(c) for c in pending_chunk)
+                       + sum(len(c) for c, _ in buffered))
             remaining = point_budget - len(results) - pending
             if remaining <= 0:
                 candidates = []
@@ -763,27 +717,16 @@ def search(
                 candidates = candidates[:remaining]
 
         # ---- evaluate: ONE Spark job (or local batch) per chunk of rounds ---
-        # async mode appends this round to the pending chunk (submitted as
-        # one fused job every ``pipeline_depth`` rounds) and only processes
-        # the OLDEST round once the pipeline is full (or nothing new could
-        # be filled) -- per-round fill/process interleaving is identical to
-        # one-job-per-round submission, so the search trace is too
-        if use_async:
-            if candidates:
-                inflight_keys.update(candidates)
-                pending_chunk.append(candidates)
-                if len(pending_chunk) >= pipeline_depth:
-                    submit_chunk()
-            if unprocessed_rounds() and (
-                unprocessed_rounds() >= pipeline_depth or not candidates
-            ):
-                drain_one_round()
-        elif candidates:
-            n_jobs += 1
-            process_round(
-                candidates,
-                evaluator.evaluate(func, [c.point for c in candidates], args),
-            )
+        # this round joins the pending chunk; the OLDEST unprocessed round
+        # is processed once ``pipeline_depth`` rounds are unprocessed (or
+        # nothing new could be filled), evaluating the chunk if needed
+        if candidates:
+            pending_keys.update(candidates)
+            pending_chunk.append(candidates)
+        if unprocessed_rounds() and (
+            unprocessed_rounds() >= pipeline_depth or not candidates
+        ):
+            drain_one_round()
 
         if point_budget is not None and len(results) >= point_budget:
             finished = True
@@ -812,9 +755,9 @@ def search(
             if incumbent.halvings >= max_halvings:
                 finished = True
         elif not finished:
-            # contraction gate: every poll point evaluated (in-flight poll
+            # contraction gate: every poll point evaluated (pending poll
             # points are still in epoch["poll"], so they hold the gate), and
-            # on exhaustion no round may remain in flight
+            # on exhaustion no round may remain unprocessed
             poll_done = not epoch["poll"] and epoch["index"] >= 2 * dims
             exhausted_done = epoch["exhausted"] and not unprocessed_rounds()
             if (poll_done and epoch["added"] >= min_new_submit) or exhausted_done:
@@ -832,12 +775,11 @@ def search(
                 if incumbent.halvings >= max_halvings:
                     finished = True
 
-    # drain any still-in-flight rounds into the ledger (the reference's
+    # drain any still-unprocessed rounds into the ledger (the reference's
     # finish-time future drain, search.py:360-362); budget accounting above
     # guarantees these rows never exceed point_budget
     while unprocessed_rounds():
         drain_one_round()
-    results.jobs = n_jobs
 
     # fold the global ledger minimum on finish (the reference's finish-time
     # processing guarantees the returned incumbent equals the ledger min,
@@ -877,9 +819,8 @@ def search_multi_start(
 
     Concurrency: starts run on driver threads.  With a Spark evaluator
     each thread submits its own single-stage jobs and the scheduler
-    interleaves them across executors (same mechanism as
-    ``AsyncSparkEvaluator``), so a straggling start no longer idles the
-    cluster; serial starts still overlap their numpy evaluation (BLAS
+    interleaves them across executors, so a straggling start no longer
+    idles the cluster; serial starts still overlap their numpy evaluation (BLAS
     releases the GIL).  ``max_workers`` caps the thread pool (default:
     all starts).  Each start gets its own evaluator, and a shared
     ``ledger_path`` fans out into per-start ``start-<i>`` subdirectories
