@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..util import ensure_parallelism
+from .graph import checkpoint, fixpoint
 
 _TOKENIZE = r"\s+"
 
@@ -1780,7 +1781,9 @@ def connected_components(
     algorithm trap).  For adversarial chain-shaped graphs use
     ``connected_components_star`` (alternating large-star/small-star),
     which converges in O(log^2 n) rounds regardless of diameter; not
-    needed for dedup-shaped graphs.
+    needed for dedup-shaped graphs.  If ``max_iterations`` rounds pass
+    without reaching the fixpoint a warning is logged (a component may
+    then carry more than one label).
 
     Returns ``(node, label)`` where ``label`` is the min node id reachable
     -- the cluster's canonical representative.  Nodes outside any pair are
@@ -1801,7 +1804,6 @@ def connected_components(
         .withColumn("chg", F.lit(True))
         .localCheckpoint(eager=False)
     )
-    from pyspark.sql import Observation
 
     # Two scale changes vs the naive loop, both result-identical:
     #
@@ -1812,14 +1814,13 @@ def connected_components(
     # full propagation row for row).  The edges join and the min-combine
     # shuffle shrink with the frontier instead of staying O(|E|)/round.
     #
-    # Fixpoint probe rides the checkpoint job itself (the pagerank/sssp
-    # observe pattern): min-label propagation is MONOTONE -- a node's
-    # label never increases and the node set is fixed -- so the exact
-    # decimal sum of labels strictly decreases iff any label changed.
-    # Comparing consecutive sums replaces the previous separate
-    # join-and-count probe job per round (2 jobs/round -> 1).
-    prev_sum = None
-    for _ in range(max_iterations):
+    # Fixpoint probe rides the checkpoint job itself: min-label
+    # propagation is MONOTONE -- a node's label never increases and the
+    # node set is fixed -- so the exact decimal sum of labels strictly
+    # decreases iff any label changed, and comparing consecutive sums
+    # needs no join-and-count probe job.
+    def propagate(state):
+        labels, prev_sum = state
         prop = (
             edges.join(
                 labels.filter("chg").select("node", "label"),
@@ -1827,8 +1828,7 @@ def connected_components(
             )
             .select(F.col("dst").alias("node"), F.col("label"))
         )
-        obs = Observation()
-        new_labels = (
+        new_labels, got = checkpoint(
             labels.select("node", "label", F.lit(True).alias("__old"))
             .unionByName(prop.select(
                 "node", "label", F.lit(False).alias("__old")))
@@ -1836,21 +1836,21 @@ def connected_components(
             .agg(
                 F.min("label").alias("label"),
                 F.min(F.when(F.col("__old"), F.col("label"))).alias("__prev"),
-            )
-            .observe(obs, F.coalesce(
+            ),
+            "node", "label",
+            (F.col("label") < F.col("__prev")).alias("chg"),
+            s=F.coalesce(
                 F.sum(F.col("label").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)")).alias("s"))
-            .select(
-                "node", "label",
-                (F.col("label") < F.col("__prev")).alias("chg"),
-            )
-            .localCheckpoint()  # eager: the change probe rides this job
+                F.lit(0).cast("decimal(38,0)")),
         )
-        label_sum = obs.get["s"]
-        labels = new_labels
-        if prev_sum is not None and label_sum == prev_sum:
-            break
-        prev_sum = label_sum
+        return (new_labels, got["s"]), got["s"] == prev_sum
+
+    labels, _ = fixpoint(
+        propagate, (labels, None), max_iterations,
+        "connected_components labels may split a component (raise "
+        "max_iterations to cover the graph's diameter, or use "
+        "connected_components_star)",
+    )
     return labels.select("node", "label")
 
 
@@ -1952,7 +1952,8 @@ def connected_components_star(
     truncates lineage each round.  Rule of thumb: use min-label
     propagation for dedup-cluster graphs (diameter 2-4, cheaper per
     round), stars for unknown / chain-risk graphs (e.g. transitive as-of
-    linkage, web graphs).
+    linkage, web graphs).  If ``max_iterations`` rounds pass without
+    reaching the fixpoint a warning is logged.
 
     Output contract matches ``connected_components``: ``(node, label)``
     with ``label`` = min reachable node id, one row per distinct endpoint
@@ -1968,24 +1969,21 @@ def connected_components_star(
         .localCheckpoint(eager=False)
     )
     # canonical directed representation: big -> small, self loops dropped
-    edges = (
+    edges, got = checkpoint(
         raw.filter(F.col("a") != F.col("b"))
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    from pyspark.sql import Observation
 
-    # Fixpoint probe rides the checkpoint job (the observe pattern the
-    # other iteratives use): both edge sets are DISTINCT, so set equality
-    # is exactly |ss| == |edges| plus "no ss row is novel vs edges" --
-    # one left join observed inline, replacing the two separate exceptAll
-    # probe jobs per round (up to 3 jobs/round -> 1, and the exceptAll
-    # set-difference shuffles with it).
-    prev_n = None
-    for _ in range(max_iterations):
+    # Fixpoint probe rides the checkpoint job: both edge sets are
+    # DISTINCT, so set equality is exactly |ss| == |edges| plus "no ss
+    # row is novel vs edges" -- one left join observed inline, with no
+    # exceptAll set-difference shuffle or probe job of its own.
+    def contract(state):
+        edges, prev_n = state
         # large-star: per node u over BOTH directions, attach strictly
         # larger neighbors to m = min(N(u) + {u})
         both = edges.unionByName(
@@ -2002,8 +2000,7 @@ def connected_components_star(
         # small-star on the (big -> small) edges: attach each node and its
         # smaller neighbors to the group min
         smins = ls.groupBy("u").agg(F.min("v").alias("m"))
-        obs = Observation()
-        ss = (
+        ss, got = checkpoint(
             ls.join(smins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(smins.select(F.col("u"), F.col("m").alias("v")))
@@ -2013,29 +2010,21 @@ def connected_components_star(
                 edges.select("u", "v", F.lit(1).alias("__old")),
                 ["u", "v"],
                 "left",
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.when(F.col("__old").isNull(), 1).otherwise(0)),
-                    F.lit(0),
-                ).alias("novel"),
-            )
-            .select("u", "v")
-            .localCheckpoint()  # eager: the change probe rides this job
+            ),
+            "u", "v",
+            n=F.count(F.lit(1)),
+            novel=F.coalesce(
+                F.sum(F.when(F.col("__old").isNull(), 1).otherwise(0)),
+                F.lit(0),
+            ),
         )
-        if prev_n is None:
-            # first round only: the baseline edge count (edges was just
-            # materialized feeding ss, so this is an RDD-count, not a
-            # recompute)
-            prev_n = edges.count()
-        n, novel = obs.get["n"], obs.get["novel"]
-        converged = novel == 0 and n == prev_n
-        edges = ss
-        prev_n = n
-        if converged:
-            break
+        return (ss, got["n"]), got["novel"] == 0 and got["n"] == prev_n
+
+    edges, _ = fixpoint(
+        contract, (edges, got["n"]), max_iterations,
+        "connected_components_star labels may split a component (raise "
+        "max_iterations)",
+    )
     # fixpoint is a forest of depth-1 stars: u -> component min
     labels = edges.select(F.col("u").alias("node"), F.col("v").alias("label"))
     return (
@@ -2505,7 +2494,7 @@ def _contracted_remap(
     )
     # remap: (old cluster id | batch doc id) -> merged new label; includes
     # self-loop components, so "touched" is exactly remap's node set
-    return connected_components(contracted).localCheckpoint(eager=True)
+    return connected_components(contracted)
 
 
 def _repick_keepers(
@@ -3100,9 +3089,9 @@ def init_dedup_state(
         min_est_jaccard=min_est_jaccard, hash_family=hash_family,
         persist_signatures=sig_path,
     ).localCheckpoint(eager=True)
-    # compute the CC fixpoint ONCE and derive keepers from it (pin: both
-    # writes below consume it)
-    labels = connected_components(cands).localCheckpoint(eager=True)
+    # compute the CC fixpoint ONCE and derive keepers from it (both
+    # writes below consume it; the CC output is already checkpointed)
+    labels = connected_components(cands)
     keepers = cluster_keepers(docs, quality_col=quality_col, labels=labels)
     tag = lambda df: df.withColumn(
         "batch_seq", F.lit(0).cast("long")

@@ -3,9 +3,11 @@
 Connected components (see ``dedup.connected_components``) and PageRank
 cover the two shapes every DataFrame-native graph engine needs: label
 propagation to a fixpoint and damped score iteration.  Both run as plain
-joins/aggregates with periodic ``localCheckpoint`` to truncate lineage --
-the standard Spark iterative-algorithm pattern (each iteration would
-otherwise append to one ever-growing plan).
+joins/aggregates with a per-round ``localCheckpoint`` to truncate lineage
+-- the standard Spark iterative-algorithm pattern (each iteration would
+otherwise append to one ever-growing plan).  Every iterative operator
+here and in ``dedup`` cuts its rounds with :func:`checkpoint`, and the
+ones that stop early run under :func:`fixpoint`.
 """
 
 from __future__ import annotations
@@ -16,6 +18,37 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
+
+
+def checkpoint(df: DataFrame, *cols, **probes) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with an eager ``localCheckpoint``; return the
+    frame and the values of the named aggregate ``probes``
+    (``name=Column``), observed in the SAME job -- a round's convergence
+    test costs no job of its own.  ``cols``, if given, project ``df``
+    after the probes and before the checkpoint, so a probe may read a
+    column the checkpointed frame drops."""
+    obs = Observation()
+    if probes:
+        df = df.observe(obs, *(c.alias(k) for k, c in probes.items()))
+    frame = (df.select(*cols) if cols else df).localCheckpoint(eager=True)
+    # the Observation stays referenced as long as the frame it measured
+    frame._observation = obs
+    return frame, obs.get if probes else {}
+
+
+def fixpoint(step, state, max_iter: int, what: str | None = None):
+    """Run ``state, done = step(state)`` until a round reports ``done`` or
+    ``max_iter`` rounds have run; return the last state.  Running out of
+    rounds logs one warning carrying ``what`` (what the result then
+    lacks); without ``what`` the cap is a silent bound."""
+    for _ in range(max_iter):
+        state, done = step(state)
+        if done:
+            return state
+    if what is not None:
+        logger.warning("max_iter=%d exhausted before the fixpoint: %s",
+                       max_iter, what)
+    return state
 
 
 def pagerank(
@@ -31,22 +64,19 @@ def pagerank(
     Scale: per iteration ONE shuffle for the contribution aggregate (the
     edges->ranks join broadcasts ranks while small, AQE-shuffles at web
     scale) plus a scalar dangling-mass aggregate.  ``with_deg`` is
-    localCheckpoint-ed every iteration BEFORE the dangling aggregate, so
-    the dangling ``.first()`` and the next iteration's join both read the
-    materialized result -- each iteration's plan executes exactly once
-    (the previous per-``checkpoint_every`` truncation re-executed up to a
-    window of join-iterations twice per round: once for the dangling
-    scalar, again when the next iteration rebuilt on ``ranks``).  At
-    production scale replace localCheckpoint with reliable checkpointing
-    to the cluster FS.
+    localCheckpoint-ed every iteration with the dangling aggregate
+    observed in the same job, and the next iteration's join reads the
+    materialized result -- each iteration's plan executes exactly once.
+    At production scale replace localCheckpoint with reliable
+    checkpointing to the cluster FS.
     """
-    verts = (
+    verts, got = checkpoint(
         edges.select(F.col(src).alias("vertex"))
         .unionByName(edges.select(F.col(dst).alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    n = verts.count()
+    n = got["n"]
     if n == 0:
         return verts.withColumn("rank", F.lit(0.0))
     # materialized once: every iteration's with_deg join consumes this
@@ -58,27 +88,21 @@ def pagerank(
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
     prev_ckpt = None
     for i in range(n_iter):
-        # the dangling-mass scalar rides the SAME job that materializes
-        # the checkpoint (df.observe): one executed plan per iteration
-        # instead of checkpoint + a separate dangling aggregate
-        obs = Observation()
-        with_deg = (
-            ranks.join(out_deg, "vertex", "left")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.when(F.col("deg").isNull(), F.col("rank"))),
-                    F.lit(0.0),
-                ).alias("dangling"),
-            )
-            .localCheckpoint(eager=True)
+        # the dangling-mass scalar rides the job that materializes the
+        # checkpoint: one executed plan per iteration
+        with_deg, got = checkpoint(
+            ranks.join(out_deg, "vertex", "left"),
+            dangling=F.coalesce(
+                F.sum(F.when(F.col("deg").isNull(), F.col("rank"))),
+                F.lit(0.0),
+            ),
         )
         if prev_ckpt is not None:
             # The previous iteration's materialization is no longer
             # reachable once this one exists; free its blocks.
             prev_ckpt.unpersist()
         prev_ckpt = with_deg
-        dangling = obs.get["dangling"]
+        dangling = got["dangling"]
         contribs = (
             edges.join(
                 with_deg.filter(F.col("deg").isNotNull()).withColumnRenamed(
@@ -254,42 +278,40 @@ def bfs_distances(
     per-round work proportional to the unvisited boundary, so total work
     is O(hops * m) worst case, not O(hops * visited).
     """
-    bi_obs = Observation()
-    bi = (
+    bi, got = checkpoint(
         edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .observe(bi_obs, F.min("src").alias("min_src"))
-        .localCheckpoint(eager=True)
+        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        min_src=F.min("src"),
     )
     if source is None:
-        source = bi_obs.get["min_src"]
+        source = got["min_src"]
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(source), 0)], "vertex long, hops int"
     ).localCheckpoint(eager=True)
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        # the frontier-size probe rides the checkpoint job via observe
-        # (one executed job per hop); the accumulated distance table is a
-        # lazy union of ALREADY-materialized frontiers -- re-checkpointing
-        # the growing union every hop would rewrite all settled vertices
-        # per round for no lineage benefit
-        obs = Observation()
-        nxt = (
+
+    def expand(state):
+        # the frontier-size probe rides the checkpoint job (one executed
+        # job per hop); the accumulated distance table is a lazy union of
+        # ALREADY-materialized frontiers -- re-checkpointing the growing
+        # union every hop would rewrite all settled vertices per round
+        # for no lineage benefit
+        dist, frontier, hop = state
+        nxt, got = checkpoint(
             bi.join(
                 F.broadcast(frontier.select(F.col("vertex").alias("src"))), "src"
             )
             .select(F.col("dst").alias("vertex"))
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
-            .withColumn("hops", F.lit(hop))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(hop)),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
-            break
-        dist = dist.unionAll(nxt)
-        frontier = nxt
+        if got["n"] == 0:
+            return state, True
+        return (dist.unionAll(nxt), nxt, hop + 1), False
+
+    dist, _, _ = fixpoint(expand, (dist, dist, 1), max_hops)
     return dist.orderBy("hops", "vertex")
 
 
@@ -332,12 +354,11 @@ def label_propagation(
             .groupBy("vertex", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        new_labels = (
+        new_labels, _ = checkpoint(
             votes.groupBy("vertex")
             .agg(F.min(F.struct((-F.col("n")).alias("neg"),
-                                F.col("label").alias("l"))).alias("best"))
-            .select("vertex", F.col("best.l").alias("label"))
-            .localCheckpoint(eager=True)
+                                F.col("label").alias("l"))).alias("best")),
+            "vertex", F.col("best.l").alias("label"),
         )
         if prev is not None:
             prev.unpersist()
@@ -384,8 +405,7 @@ def sssp(
     """
     # the negative-weight validation and the min-vertex default ride the
     # one job that materializes the bidirectional edge list
-    bi_obs = Observation()
-    bi = (
+    bi, got = checkpoint(
         edges.select("src", "dst", weight_col)
         .unionAll(
             edges.select(
@@ -393,24 +413,20 @@ def sssp(
                 F.col("src").alias("dst"),
                 weight_col,
             )
-        )
-        .observe(
-            bi_obs,
-            F.coalesce(F.min(weight_col), F.lit(0.0)).alias("min_w"),
-            F.min("src").alias("min_src"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        min_w=F.coalesce(F.min(weight_col), F.lit(0.0)),
+        min_src=F.min("src"),
     )
-    if bi_obs.get["min_w"] < 0:
+    if got["min_w"] < 0:
         raise ValueError("sssp requires non-negative weights")
     if source is None:
-        source = bi_obs.get["min_src"]
+        source = got["min_src"]
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(source), 0.0, True)], "vertex long, dist double, imp boolean"
     ).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iter):
+
+    def relax(dist):
         relaxed = (
             bi.join(
                 dist.filter("imp")
@@ -422,7 +438,6 @@ def sssp(
                 (F.col("dist") + F.col(weight_col)).alias("dist"),
             )
         )
-        obs = Observation()
         # the node's previous distance rides the union as a tagged row
         # and comes back out of the SAME min-combine aggregate (each
         # vertex has at most one tagged row), so the improvement probe
@@ -431,8 +446,9 @@ def sssp(
         # marks ANY strict decrease (no epsilon): sub-epsilon float
         # improvements still enter the next frontier, so the evolving
         # table matches full-edge relaxation bit for bit; the epsilon
-        # stays on the STOP probe only, exactly as before.
-        new = (
+        # stays on the STOP probe only.
+        d, prev = F.col("dist"), F.col("__prev")
+        new, got = checkpoint(
             dist.select("vertex", "dist", F.lit(True).alias("__old"))
             .unionByName(
                 relaxed.select("vertex", "dist", F.lit(False).alias("__old"))
@@ -441,40 +457,20 @@ def sssp(
             .agg(
                 F.min("dist").alias("dist"),
                 F.min(F.when(F.col("__old"), F.col("dist"))).alias("__prev"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    F.when(
-                        F.col("__prev").isNull()
-                        | (F.col("dist") < F.col("__prev") - 1e-12),
-                        1,
-                    ).otherwise(0)
-                ).alias("improved"),
-            )
-            .select(
-                "vertex",
-                "dist",
-                (
-                    F.col("__prev").isNull()
-                    | (F.col("dist") < F.col("__prev"))
-                ).alias("imp"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "vertex", "dist", (prev.isNull() | (d < prev)).alias("imp"),
+            improved=F.sum(
+                F.when(prev.isNull() | (d < prev - 1e-12), 1).otherwise(0)
+            ),
         )
-        improved = obs.get["improved"]
-        prev = dist
-        dist = new
-        prev.unpersist()
-        if improved == 0:
-            converged = True
-            break
-    if not converged:
-        logger.warning(
-            "sssp: max_iter=%d exhausted before fixpoint; returned "
-            "distances are upper bounds (raise max_iter to cover the "
-            "graph's hop diameter)", max_iter,
-        )
+        dist.unpersist()
+        return new, got["improved"] == 0
+
+    dist = fixpoint(
+        relax, dist, max_iter,
+        "sssp distances are upper bounds, not final (raise max_iter to "
+        "cover the graph's hop diameter)",
+    )
     return dist.select("vertex", F.round("dist", 6).alias("dist")).orderBy(
         "dist", "vertex"
     )
@@ -502,41 +498,31 @@ def kcore(
     a warning is logged (the result may then contain vertices outside
     the true k-core).
     """
-    bi_obs = Observation()
-    bi = (
+    bi, got = checkpoint(
         edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .observe(bi_obs, F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=True)
+        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        m=F.count(F.lit(1)),
     )
-    prev_m = bi_obs.get["m"]
-    cur = bi
-    converged = prev_m == 0
-    for _ in range(max_iter):
-        if converged:
-            break
+
+    def peel(state):
+        cur, m = state
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
-        obs = Observation()
-        nxt = (
+        nxt, got = checkpoint(
             cur.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("m"))
-            .localCheckpoint(eager=True)
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi"),
+            m=F.count(F.lit(1)),
         )
-        m = obs.get["m"]
-        prev = cur
-        cur = nxt
-        if prev is not bi:
-            prev.unpersist()
-        if m == prev_m or m == 0:
-            converged = True
-        prev_m = m
-    if not converged:
-        logger.warning(
-            "kcore: max_iter=%d exhausted before the peel fixpoint; the "
-            "result may include vertices outside the true %d-core (raise "
-            "max_iter to cover the graph's peel depth)", max_iter, k,
+        if cur is not bi:
+            cur.unpersist()
+        return (nxt, got["m"]), got["m"] in (m, 0)
+
+    cur = bi
+    if got["m"]:
+        cur, _ = fixpoint(
+            peel, (bi, got["m"]), max_iter,
+            f"the kcore result may include vertices outside the true "
+            f"{k}-core (raise max_iter to cover the graph's peel depth)",
         )
     return (
         cur.groupBy(F.col("src").alias("vertex"))

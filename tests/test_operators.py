@@ -1624,9 +1624,13 @@ def test_kcore_cascading_peel(spark):
 def test_kcore_and_sssp_warn_on_max_iter_exhaustion(spark, caplog):
     """Hitting max_iter before the fixpoint must be surfaced, not
     silent: the result may then include non-core vertices / un-relaxed
-    distances."""
+    distances / a component split across several labels."""
     import logging
 
+    from dask_patternsearch_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
     from dask_patternsearch_spark.operators.graph import kcore, sssp
 
     # a 6-chain needs 3 peel rounds to empty at k=2; max_iter=1 cannot
@@ -1649,12 +1653,73 @@ def test_kcore_and_sssp_warn_on_max_iter_exhaustion(spark, caplog):
     assert any("max_iter" in r.message for r in caplog.records)
 
     caplog.clear()
+    # a 41-node chain has diameter 40; 25 min-label rounds cannot reach
+    # its far end, so one component comes back with several labels
+    chain41 = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
+    )
+    with caplog.at_level(logging.WARNING,
+                         logger="dask_patternsearch_spark.operators.graph"):
+        labels = {r["label"] for r in connected_components(chain41).collect()}
+    assert labels != {0}
+    assert any("max_iter" in r.message and "connected_components" in r.message
+               for r in caplog.records)
+
+    caplog.clear()
+    # one star round cannot contract a 300-node chain
+    chain300 = spark.createDataFrame(
+        [(i, i + 1) for i in range(299)], "doc_a long, doc_b long"
+    )
+    with caplog.at_level(logging.WARNING,
+                         logger="dask_patternsearch_spark.operators.graph"):
+        connected_components_star(chain300, max_iterations=1).count()
+    assert any("max_iter" in r.message
+               and "connected_components_star" in r.message
+               for r in caplog.records)
+
+    caplog.clear()
     # converged runs stay silent
     with caplog.at_level(logging.WARNING,
                          logger="dask_patternsearch_spark.operators.graph"):
         kcore(chain, k=2, max_iter=10).count()
         sssp(weighted, source=1, max_iter=10).count()
+        assert connected_components(
+            chain, a_col="src", b_col="dst"
+        ).select("label").distinct().collect() == [(1,)]
+        assert {r["label"] for r in
+                connected_components_star(chain300).collect()} == {0}
     assert not caplog.records
+
+
+def test_checkpoint_probes_ride_the_checkpoint_job(spark):
+    """``graph.checkpoint`` observes its probes in the job that
+    materializes the frame: two probes cost no job over none, and their
+    values equal a separate aggregate over the same rows."""
+    from dask_patternsearch_spark.operators.graph import checkpoint
+
+    sc = spark.sparkContext
+    df = spark.range(0, 500, numPartitions=4).select(
+        (F.col("id") % 37).alias("k"), (F.col("id") * 3).alias("v")
+    ).groupBy("k").agg(F.sum("v").alias("s"))
+    probes = {"n": F.count(F.lit(1)), "top": F.max("s")}
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            frame, got = checkpoint(df, "k", "s", **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), frame, got
+
+    bare_jobs, bare, none = jobs("checkpoint-no-probes")
+    probed_jobs, probed, got = jobs("checkpoint-two-probes", **probes)
+    assert none == {}
+    assert probed_jobs == bare_jobs
+    want = df.agg(*(c.alias(k) for k, c in probes.items())).first().asDict()
+    assert got == want and want["n"] == 37
+    assert sorted(map(tuple, probed.collect())) == sorted(
+        map(tuple, bare.collect()))
 
 
 def test_embedding_neardup_multiprobe_recall(spark):

@@ -829,3 +829,79 @@ def test_multi_start_flat_memo_with_stray_start_file(tmp_path):
     # shared-memo semantics preserved: no start re-evaluates the memo's
     # points beyond the re-seeded x0s
     assert set(calls) & (warm[0] - {tuple(x0s[0]), tuple(x0s[1])}) == set()
+
+
+def _rosen(x):
+    return float(((1 - x[:-1]) ** 2).sum() + 100 * ((x[1:] - x[:-1] ** 2) ** 2).sum())
+
+
+def _offset_int(x):
+    return float(x[0] ** 2 + (x[1] - 0.1) ** 2)
+
+
+# (objective, x0, stepsize, kwargs) -> fingerprint of the serial search.
+# Every run is seeded, so the ledger is a pure function of the code: any
+# change to round filling, dedup, acceptance or contraction moves a hash.
+LEDGER_CONFIGS = {
+    "sphere_d1": (sphere, X0, STEP, {}),
+    "sphere_d2": (sphere, X0, STEP, {"pipeline_depth": 2}),
+    "sphere_d3": (sphere, X0, STEP, {"pipeline_depth": 3}),
+    "rosen_d1": (_rosen, [2.0, 2.0, 2.0], [0.5] * 3, {"max_tasks": 300}),
+    "rosen_d3": (_rosen, [2.0, 2.0, 2.0], [0.5] * 3,
+                 {"max_tasks": 300, "pipeline_depth": 3}),
+    "batch_vec_d1": (sphere_vectorized, X0, STEP,
+                     {"batchsize": 5, "vectorize": True}),
+    "batch_vec_d2": (sphere_vectorized, X0, STEP,
+                     {"batchsize": 5, "vectorize": True, "pipeline_depth": 2}),
+    "integer_d1": (_offset_int, X0, STEP, {"integer_dimensions": [0]}),
+    "integer_d3": (_offset_int, X0, STEP,
+                   {"integer_dimensions": [0], "pipeline_depth": 3}),
+    "bounds_d2": (sphere_p1, X0, STEP,
+                  {"bounds": ([2.0, -20.0], [20.0, 20.0]), "pipeline_depth": 2}),
+    "max_tasks_d2": (sphere, X0, STEP, {"max_tasks": 25, "pipeline_depth": 2}),
+    "min_new_submit_d3": (sphere, X0, STEP,
+                          {"min_new_submit": 8, "pipeline_depth": 3}),
+}
+
+# recorded from the search loop before it was guarded; a change that
+# moves one of these changes what search() returns
+LEDGER_FINGERPRINTS = {
+    "batch_vec_d1": "8eea2cab0396555517b4ebff7b40b09d61dd83df",
+    "batch_vec_d2": "650442f1805839eb9e854f97ffa0de7a024c2f83",
+    "bounds_d2": "2a36f3215dda6cf23f47d4238daa25f0a4558042",
+    "integer_d1": "e854aa091b3138fca5585a4f3900361b88e93024",
+    "integer_d3": "fdf0643a1e57f08e9c423d5a3d3169f0931851fc",
+    "max_tasks_d2": "40cd8ca36c88f80f27401e4b57f7f75532879fec",
+    "min_new_submit_d3": "85020a93a32f67f011f46d27435b863cda229372",
+    "rosen_d1": "7c51853829f7914b00d4cf16383c18ab05cef173",
+    "rosen_d3": "d77c8076b617d1ee31cfd91698773c90f6bf7c32",
+    "sphere_d1": "e33257be13e6397290bad52e07f4f65ab12b93cb",
+    "sphere_d2": "f7af20d56a25103fef335bf1bce1d32e51c284b2",
+    "sphere_d3": "9d7a0eb8e5456db2639f0d40218775a143a3c08a",
+}
+
+
+def _ledger_fingerprint(results) -> str:
+    """sha1 over the whole ledger in insertion order -- point bytes,
+    halvings, parent point, accepted flag, cost -- plus rounds and jobs."""
+    import hashlib
+    import struct
+
+    h = hashlib.sha1()
+    for tp, cost in results.items():
+        h.update(tp.point.tobytes())
+        h.update(struct.pack("<i?", tp.halvings, tp.is_accepted))
+        h.update(b"-" if tp.parent is None else tp.parent.point.tobytes())
+        h.update(struct.pack("<d", float(cost)))
+    h.update(struct.pack("<qq", results.rounds, results.jobs))
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("name", sorted(LEDGER_CONFIGS))
+def test_serial_ledger_fingerprint(name):
+    """Guard for search-loop refactors: each seeded serial configuration
+    must reproduce, bit for bit, the ledger recorded before the change."""
+    func, x0, step, kwargs = LEDGER_CONFIGS[name]
+    _best, results = search(func, np.asarray(x0, dtype=float),
+                            np.asarray(step, dtype=float), seed=7, **kwargs)
+    assert _ledger_fingerprint(results) == LEDGER_FINGERPRINTS[name]
