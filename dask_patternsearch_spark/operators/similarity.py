@@ -1126,33 +1126,22 @@ def rebuild_ivf_layout(
     assignment pass + one partitioned write exactly like the original
     build, never per-ingest.
 
-    The rewrite is two-phase (sibling temp dir + directory renames, same
-    discipline and maintenance-window caveat as
-    ``sources.io.compact_files``), so readers never observe a
-    half-rewritten layout and the original survives a mid-job failure.
+    The layout is rewritten into a staging dir and moved in by
+    ``sources.io.swap_dir`` (crash contract there; a crashed swap is
+    healed first), so readers never observe a half-rewritten layout.
     The vector set is preserved exactly (same rows, new cell
     assignment); probes pick up the new geometry through the rewritten
     ``_centroids.parquet`` with zero code changes.  Returns the new
     centroid matrix.
     """
-    import os
-    import shutil
+    from ..sources.io import heal_dir_swap, staging_dir, swap_dir
 
-    p = path.rstrip("/")
-    vecs = spark.read.parquet(p).drop("cell").localCheckpoint(eager=True)
-    tmp, old = p + "__rebuild_tmp", p + "__rebuild_old"
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
+    heal_dir_swap(path)
+    vecs = spark.read.parquet(path).drop("cell").localCheckpoint(eager=True)
+    tmp = staging_dir(path)
     cents = write_ivf_layout(vecs, tmp, n_cells=n_cells, seed=seed,
                              sample_size=sample_size, centroids=centroids)
-    os.rename(p, old)
-    try:
-        os.rename(tmp, p)
-    except BaseException:
-        os.rename(old, p)
-        raise
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     return cents
 
 

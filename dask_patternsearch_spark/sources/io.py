@@ -13,6 +13,11 @@ Scale defaults baked in:
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -279,6 +284,66 @@ def overwrite_partitions(
         spark.conf.set(key, prev)
 
 
+def staging_dir(path: str) -> str:
+    """A fresh sibling of ``path`` to write its rewritten copy into
+    before :func:`swap_dir` moves it in place."""
+    return path.rstrip("/") + ".compact-" + uuid.uuid4().hex
+
+
+def swap_dir(tmp: str, path: str) -> None:
+    """Replace directory ``path`` with ``tmp`` by two renames: ``path``
+    to a ``.old-<uuid>`` sibling (when it exists), then ``tmp`` to
+    ``path``; the sibling is removed last.  Readers never see a
+    half-written directory.  If the second rename raises, the original
+    is put back before the error propagates.  If the process dies
+    between the renames, ``path`` is missing and its data sits in the
+    sibling; every caller runs :func:`heal_dir_swap` on ``path`` before
+    it reads, so the next call restores it and nothing is lost.
+
+    Local filesystem only.  There is a brief window in which ``path``
+    does not exist, so swaps run single-writer with no concurrent
+    readers (the maintenance-window posture); on a lake/metastore, swap
+    a table pointer instead, which is atomic for readers."""
+    path = path.rstrip("/")
+    old = path + ".old-" + uuid.uuid4().hex
+    moved = os.path.exists(path)
+    if moved:
+        os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        if moved:
+            os.rename(old, path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+# fixed sibling names of the two-rename swaps that predate swap_dir:
+# still recognised so a directory that crashed under them heals
+_LEGACY_OLD = ("__compact_old", "__rebuild_old")
+_LEGACY_TMP = ("__compact_tmp", "__rebuild_tmp")
+
+
+def heal_dir_swap(path: str) -> None:
+    """Heal a crashed :func:`swap_dir` around ``path``.  If ``path`` is
+    missing and pre-swap siblings exist, the NEWEST sibling is the
+    pre-crash directory: rename it back (the interrupted rewrite never
+    swapped in its output, so restoring the input loses nothing; a retry
+    rewrites from it).  Superseded siblings and orphaned staging dirs
+    are removed either way, so the caller must be the only writer (a
+    state lock or the maintenance window).  Cheap when there is nothing
+    to do: two directory globs."""
+    path = path.rstrip("/")
+    olds = glob.glob(glob.escape(path) + ".old-*") + [
+        path + s for s in _LEGACY_OLD if os.path.exists(path + s)]
+    if olds and not os.path.exists(path):
+        olds.sort(key=os.path.getmtime)
+        os.rename(olds.pop(), path)
+    for leftover in (olds + glob.glob(glob.escape(path) + ".compact-*")
+                     + [path + s for s in _LEGACY_TMP]):
+        shutil.rmtree(leftover, ignore_errors=True)
+
+
 def compact_files(
     spark: SparkSession,
     path: str,
@@ -297,26 +362,14 @@ def compact_files(
     The output file count derives from the CURRENT on-disk byte total
     (driver-side file listing -- metadata only, no data read), then one
     ``repartition(n)`` round-robin shuffle spreads rows evenly across
-    exactly ``n`` writers.  Two-phase safety: the compacted copy lands in
-    a sibling temp dir first and is swapped in with directory renames, so
-    readers never observe a HALF-WRITTEN table and the original survives
-    any mid-job failure (a failure between the two renames restores the
-    original path).
-
-    Concurrency contract (local-FS implementation): the swap is two
-    directory renames, so there is a brief window in which ``path`` does
-    not exist -- a reader listing the table in exactly that window sees
-    FileNotFound.  Run compaction single-writer with no concurrent
-    readers (the maintenance-window posture).  On a production
-    lake/metastore, swap a table POINTER (metastore location update,
-    Iceberg/Delta commit) instead of the directory -- that swap is atomic
-    for readers.
+    exactly ``n`` writers.  The compacted copy lands in a
+    :func:`staging_dir` and is moved in by :func:`swap_dir` (crash
+    contract and single-writer caveat there); a previous run's crashed
+    swap is healed first.
 
     Returns a manifest dict: files/bytes before and after.
     """
     import math
-    import os
-    import shutil
 
     if fmt not in FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; expected one of {FORMATS}")
@@ -331,15 +384,10 @@ def compact_files(
                 b += os.path.getsize(os.path.join(root, f))
         return n, b
 
+    heal_dir_swap(path)
     files_before, bytes_before = _scan(path)
     n_out = max(1, math.ceil(bytes_before / target_file_bytes))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
-    # a previous run that died between its renames may have left either
-    # sibling behind; clear them so this run's renames cannot fail
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
+    tmp = staging_dir(path)
     df = getattr(spark.read, fmt)(path)
     # compaction makes files BIGGER -- exactly when row-group bounds
     # matter most (a 512 MB single-group file would undo the compaction
@@ -348,15 +396,7 @@ def compact_files(
         df.repartition(n_out).write.mode("overwrite"), fmt,
         max_group_rows, max_group_bytes)
     getattr(writer, fmt)(tmp)
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        # never leave the table absent: put the original back before
-        # propagating (the __compact_tmp copy is left for inspection)
-        os.rename(old, path)
-        raise
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     files_after, bytes_after = _scan(path)
     return {
         "files_before": files_before,

@@ -28,7 +28,8 @@ replay) and are collapsed by a GEOMETRIC rebuild (when the ledger
 doubles since the last rebuild -- amortized O(1) per row, so the
 rebuild never becomes a per-batch corpus term).  A pre-round-12 ledger
 is migrated in place on first contact (one clustered rewrite + bloom
-build, swap-crash-healed by the shared ``_recover_dir_swap``).  Plain
+build, moved in by ``sources.io.swap_dir`` and crash-healed by
+``sources.io.heal_dir_swap``).  Plain
 parquet append keeps this container-friendly; at real scale the same
 body targets Delta/Iceberg (atomic append) or a key-value store -- the
 structure is what carries over, exactly as for
@@ -72,9 +73,10 @@ def neardup_filter_stream(
                                    _bands_key_expr, _bloom_filter_keys,
                                    _bloom_list_files, _bloom_rows,
                                    _layout_pfx_len, _pick_pfx_len,
-                                   _recover_dir_swap, minhash_signatures)
+                                   minhash_signatures)
     from ..sources.io import (DEFAULT_MAX_GROUP_BYTES, DEFAULT_MAX_GROUP_ROWS,
-                              _row_group_options)
+                              _row_group_options, heal_dir_swap, staging_dir,
+                              swap_dir)
 
     rows_per_band = n_perm // n_bands
     bdir = bands_path + ".bloom"
@@ -203,22 +205,20 @@ def neardup_filter_stream(
         jvm = sp.sparkContext._jvm
         hconf = sp.sparkContext._jsc.hadoopConfiguration()
         dst = jvm.org.apache.hadoop.fs.Path(bands_path)
+        # heal a crashed migration swap BEFORE the existence check: the
+        # crash leaves bands_path missing, which must not read as "no
+        # ledger yet"
+        heal_dir_swap(bands_path)
         if dst.getFileSystem(hconf).exists(dst):
-            _recover_dir_swap(bands_path)  # heal a crashed migration swap
             ledger_rd = sp.read.parquet(bands_path)
             if not os.path.exists(meta_path) or "bk" not in ledger_rd.columns:
                 # pre-round-12 ledger: one-time in-place migration to the
-                # clustered layout + bloom (two-rename swap; a crash
-                # strands the old ledger in the .old sibling, healed
-                # above on the next batch)
-                tmp = bands_path + ".compact-" + uuid.uuid4().hex
+                # clustered layout + bloom
+                tmp = staging_dir(bands_path)
                 _write_clustered(
                     ledger_rd.select("band", "bucket", "doc_id"),
                     "errorifexists", tmp)
-                old = bands_path + ".old-" + uuid.uuid4().hex
-                os.rename(bands_path, old)
-                os.rename(tmp, bands_path)
-                shutil.rmtree(old, ignore_errors=True)
+                swap_dir(tmp, bands_path)
                 ledger_rd = sp.read.parquet(bands_path)
                 _rebuild_bloom(sp, ledger_rd.count())
             elif not os.path.exists(bdir):

@@ -270,7 +270,7 @@ def upsert_ledger_stream(
     merge keyed on user_id -- is what carries over.
     """
     from ..operators.merge import upsert
-    from .ledger import recover_swap
+    from .ledger import recover_swap, write_swapped
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -283,8 +283,7 @@ def upsert_ledger_stream(
         base_dir = ledger_path.rstrip("/")
         jvm = spark.sparkContext._jvm
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        dst = HPath(base_dir)
+        dst = jvm.org.apache.hadoop.fs.Path(base_dir)
         fs = dst.getFileSystem(hconf)
         recover_swap(fs, dst)
         if fs.exists(dst):
@@ -292,21 +291,7 @@ def upsert_ledger_stream(
             merged = upsert(base, latest, keys=["user_id"], order_col="ts_ms")
         else:
             merged = latest
-        # Distributed write to a temp sibling: executes the merge plan
-        # while the old ledger it reads is still in place.
-        tmp = HPath(f"{base_dir}.tmp-{batch_id}")
-        old = HPath(f"{base_dir}.old-{batch_id}")
-        fs.delete(tmp, True)
-        merged.write.mode("overwrite").parquet(str(tmp))
-        # Metadata-only swap, then drop the superseded snapshot.
-        # rename returns False on most Hadoop failures instead of raising;
-        # an unchecked failure here would let the stream checkpoint commit
-        # the batch against a stale (or missing) ledger
-        if fs.exists(dst) and not fs.rename(dst, old):
-            raise IOError(f"ledger swap rename failed: {dst} -> {old}")
-        if not fs.rename(tmp, dst):
-            raise IOError(f"ledger swap rename failed: {tmp} -> {dst}")
-        fs.delete(old, True)
+        write_swapped(fs, dst, batch_id, merged)
 
     q = (
         events.select(

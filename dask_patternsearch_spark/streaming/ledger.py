@@ -1,7 +1,8 @@
-"""Shared crash recovery for the tmp-sibling/rename ledger swap.
+"""The tmp-sibling/rename ledger swap on a Hadoop filesystem, and its
+crash recovery.
 
 ``upsert_ledger_stream`` and ``kmv_ledger_stream`` both commit each
-micro-batch's merged ledger with the same two-rename discipline::
+micro-batch's merged ledger through ``write_swapped``::
 
     write merged -> <dst>.tmp-<batch_id>
     rename <dst> -> <dst>.old-<batch_id>      # window opens
@@ -55,3 +56,27 @@ def recover_swap(fs, dst) -> None:
             raise IOError(f"ledger recovery rename failed: {newest} -> {dst}")
     for _, p in olds:
         fs.delete(p, True)
+
+
+def write_swapped(fs, dst, batch_id: int, df) -> None:
+    """Write ``df`` to ``<dst>.tmp-<batch_id>`` and swap it in as ``dst``
+    by two renames, dropping the superseded ledger last.  The write runs
+    while the old ledger ``df`` may read is still in place.
+
+    Hadoop ``FileSystem.rename`` reports most failures via a False
+    return, not an exception; each rename is checked and raises, since
+    an unchecked failure would let the stream checkpoint commit the
+    batch against a stale (or missing) ledger.  A crash between the
+    renames is healed by :func:`recover_swap` at the next batch start.
+
+    ``fs``/``dst`` are py4j Hadoop ``FileSystem``/``Path`` handles.
+    """
+    tmp = dst.suffix(f".tmp-{batch_id}")
+    old = dst.suffix(f".old-{batch_id}")
+    fs.delete(tmp, True)
+    df.write.mode("overwrite").parquet(str(tmp))
+    if fs.exists(dst) and not fs.rename(dst, old):
+        raise IOError(f"ledger swap rename failed: {dst} -> {old}")
+    if not fs.rename(tmp, dst):
+        raise IOError(f"ledger swap rename failed: {tmp} -> {dst}")
+    fs.delete(old, True)

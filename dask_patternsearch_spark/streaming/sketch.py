@@ -8,11 +8,10 @@ Because the KMV sketch state is a relation that merges associatively
 own rows and folds them into the ledger -- O(batch) work per batch,
 bounded ledger size (k longs per group) forever.  This is the
 streaming twin of the mergeability property the batch tests lock, and
-the same tmp-sibling/rename swap discipline as
-``streaming.events.upsert_ledger_stream`` -- plus the batch-start
-``ledger.recover_swap`` heal for a crash landing between the two
-renames -- keeps the ledger write crash-consistent without a
-transactional table format.
+the tmp-sibling/rename swap it shares with
+``streaming.events.upsert_ledger_stream`` (``ledger.write_swapped``,
+healed at batch start by ``ledger.recover_swap``) keeps the ledger
+write crash-consistent without a transactional table format.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ def kmv_ledger_stream(
     """Drain ``events`` (availableNow), folding per-batch KMV sketches of
     ``user_id`` per ``event_type`` into the parquet ledger."""
     from ..operators.sketches import kmv_merge, kmv_sketch
-    from .ledger import recover_swap
+    from .ledger import recover_swap, write_swapped
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -37,8 +36,7 @@ def kmv_ledger_stream(
         base_dir = ledger_path.rstrip("/")
         jvm = sp.sparkContext._jvm
         hconf = sp.sparkContext._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        dst = HPath(base_dir)
+        dst = jvm.org.apache.hadoop.fs.Path(base_dir)
         fs = dst.getFileSystem(hconf)
         recover_swap(fs, dst)
         if fs.exists(dst):
@@ -46,18 +44,7 @@ def kmv_ledger_stream(
             merged = kmv_merge(prior, sk, ["event_type"], k)
         else:
             merged = sk
-        tmp = HPath(f"{base_dir}.tmp-{batch_id}")
-        old = HPath(f"{base_dir}.old-{batch_id}")
-        fs.delete(tmp, True)
-        merged.write.mode("overwrite").parquet(str(tmp))
-        # rename returns False on most Hadoop failures instead of raising;
-        # an unchecked failure here would let the stream checkpoint commit
-        # the batch against a stale (or missing) ledger
-        if fs.exists(dst) and not fs.rename(dst, old):
-            raise IOError(f"ledger swap rename failed: {dst} -> {old}")
-        if not fs.rename(tmp, dst):
-            raise IOError(f"ledger swap rename failed: {tmp} -> {dst}")
-        fs.delete(old, True)
+        write_swapped(fs, dst, batch_id, merged)
 
     q = (
         events.writeStream.foreachBatch(merge_batch)

@@ -2945,7 +2945,7 @@ def test_audit_ivf_balance_detects_drift_and_rebuild_fixes(spark, tmp_path):
     (audit shows the hot-cell skew); rebuild_ivf_layout re-trains on the
     current distribution and rewrites in place -- vec set preserved
     exactly, skew collapsed, probes work against the new geometry."""
-    import os
+    import glob
 
     rng = np.random.default_rng(3)
     base = rng.standard_normal((120, 8))
@@ -2974,8 +2974,7 @@ def test_audit_ivf_balance_detects_drift_and_rebuild_fixes(spark, tmp_path):
     after_ids = {r["vec_id"] for r in
                  spark.read.parquet(p).select("vec_id").collect()}
     assert after_ids == before_ids       # rewrite preserves the vector set
-    assert not os.path.exists(p + "__rebuild_tmp")
-    assert not os.path.exists(p + "__rebuild_old")
+    assert glob.glob(glob.escape(p) + "?*") == []   # no swap debris
     # probes pick up the new geometry: a drifted query finds drifted
     # neighbors through the rewritten centroid table
     q = spark.createDataFrame(
@@ -2983,6 +2982,33 @@ def test_audit_ivf_balance_detects_drift_and_rebuild_fixes(spark, tmp_path):
     res = similarity.ivf_layout_topk(spark, p, q, k=5, n_probe=2).collect()
     assert len(res) == 5
     assert all(r["neighbor_id"] >= 1000 for r in res)
+
+
+@pytest.mark.parametrize("old_sfx", [
+    "__rebuild_old",   # fixed name before swap_dir
+    ".old-0a1b",       # swap_dir's name
+])
+def test_rebuild_ivf_layout_heals_a_crash_between_its_renames(
+        spark, tmp_path, old_sfx):
+    """A rebuild that died between its two renames left the layout only
+    in the old sibling.  The next rebuild_ivf_layout restores it and
+    rebuilds from it: the vector set is preserved, no sibling remains."""
+    import glob
+    import os
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v])
+         for i, v in enumerate(rng.standard_normal((60, 4)))],
+        "vec_id long, embedding array<double>")
+    p = str(tmp_path / "ivf")
+    similarity.write_ivf_layout(emb, p, n_cells=4, sample_size=60)
+    os.rename(p, p + old_sfx)
+    similarity.rebuild_ivf_layout(spark, p, n_cells=4, sample_size=60)
+    ids = sorted(r["vec_id"] for r in
+                 spark.read.parquet(p).select("vec_id").collect())
+    assert ids == list(range(60))
+    assert glob.glob(glob.escape(p) + "?*") == []
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -3864,9 +3890,10 @@ def test_cdc_swap_crash_heals_on_compaction_retry(spark, tmp_path):
 
 
 def test_keeper_log_swap_crash_heals_on_next_ingest(spark, tmp_path):
-    """The label/keeper compactor's fixed-name swap window
-    (__compact_old present, live log missing) heals the same way on the
-    next ingest_batch, with resolution identical to a control state."""
+    """A keeper log that crashed under the fixed sibling name used
+    before ``swap_dir`` (__compact_old present, live log missing) still
+    heals on the next ingest_batch, with resolution identical to a
+    control state."""
     import os
 
     docs = _mk_docs(spark, _near_dup_rows(23, 40))

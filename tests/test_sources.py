@@ -1,3 +1,6 @@
+import os
+
+import pytest
 
 
 def test_overwrite_partitions_touches_only_emitted_partitions(spark, tmp_path):
@@ -40,10 +43,126 @@ def test_compact_files_reduces_file_count_preserves_data(spark, tmp_path):
     assert manifest["files_after"] == 1  # total bytes << 1 GiB target
     after = spark.read.parquet(path)
     assert sorted(tuple(r) for r in after.collect()) == rows_before
-    # no temp/old dirs left behind
-    import os
-    assert not os.path.exists(path + "__compact_tmp")
-    assert not os.path.exists(path + "__compact_old")
+    # no staging/old sibling left behind
+    assert _siblings(path) == []
+
+
+def _siblings(path):
+    """Every directory entry named ``path`` + something (swap debris)."""
+    import glob
+
+    return sorted(glob.glob(glob.escape(path) + "?*"))
+
+
+@pytest.mark.parametrize("old_sfx,tmp_sfx", [
+    ("__compact_old", "__compact_tmp"),   # fixed names before swap_dir
+    (".old-0a1b", ".compact-2c3d"),       # swap_dir / staging_dir names
+])
+def test_compact_files_heals_a_crash_between_its_renames(
+        spark, tmp_path, old_sfx, tmp_sfx):
+    """A compaction that died between its two renames left the table
+    only in the old sibling, next to a complete staged copy.  The next
+    compact_files must restore the table, not delete both copies."""
+    import shutil
+
+    from dask_patternsearch_spark.sources.io import compact_files
+
+    path = str(tmp_path / "t")
+    spark.range(0, 1000).repartition(8).write.parquet(path)
+    shutil.copytree(path, path + tmp_sfx)   # staged copy, fully written
+    os.rename(path, path + old_sfx)         # first rename done, crash
+    compact_files(spark, path, target_file_bytes=1 << 30)
+    ids = sorted(r["id"] for r in spark.read.parquet(path).collect())
+    assert ids == list(range(1000))
+    assert _siblings(path) == []
+
+
+def test_swap_dir_onto_missing_path(tmp_path):
+    from dask_patternsearch_spark.sources.io import staging_dir, swap_dir
+
+    path = str(tmp_path / "d")
+    tmp = staging_dir(path)
+    os.makedirs(tmp)
+    open(os.path.join(tmp, "f"), "w").close()
+    swap_dir(tmp, path)
+    assert os.listdir(path) == ["f"]
+    assert _siblings(path) == []
+
+
+def test_swap_dir_restores_the_original_when_the_second_rename_raises(
+        tmp_path, monkeypatch):
+    from dask_patternsearch_spark.sources import io
+
+    path = str(tmp_path / "d")
+    os.makedirs(path)
+    open(os.path.join(path, "orig"), "w").close()
+    tmp = io.staging_dir(path)
+    os.makedirs(tmp)
+    real_rename, calls = os.rename, []
+
+    def rename(src, dst):
+        calls.append(src)
+        if src == tmp:
+            raise OSError("injected")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(io.os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        io.swap_dir(tmp, path)
+    monkeypatch.undo()
+    assert calls[:2] == [path, tmp]
+    assert os.listdir(path) == ["orig"]
+    # only the staged copy remains, for the next heal to remove
+    assert _siblings(path) == [tmp]
+
+
+def _mkdir_with(path, name, mtime=None):
+    os.makedirs(path)
+    open(os.path.join(path, name), "w").close()
+    if mtime is not None:
+        os.utime(path, (mtime, mtime))
+
+
+def test_heal_dir_swap_restores_the_newest_old_sibling(tmp_path):
+    from dask_patternsearch_spark.sources.io import heal_dir_swap
+
+    path = str(tmp_path / "d")
+    _mkdir_with(path + ".old-aa", "oldest", mtime=1_000)
+    _mkdir_with(path + ".old-bb", "newest", mtime=3_000)
+    _mkdir_with(path + ".old-cc", "middle", mtime=2_000)
+    _mkdir_with(path + ".compact-dd", "staged")
+    heal_dir_swap(path)
+    assert os.listdir(path) == ["newest"]
+    assert _siblings(path) == []
+
+
+def test_heal_dir_swap_with_path_present_only_cleans_siblings(tmp_path):
+    from dask_patternsearch_spark.sources.io import heal_dir_swap
+
+    path = str(tmp_path / "d")
+    _mkdir_with(path, "live")
+    _mkdir_with(path + ".old-aa", "superseded")
+    _mkdir_with(path + ".compact-bb", "staged")
+    _mkdir_with(path + "__compact_tmp", "staged")
+    heal_dir_swap(path)
+    assert os.listdir(path) == ["live"]
+    assert _siblings(path) == []
+
+
+@pytest.mark.parametrize("old_sfx,tmp_sfx", [
+    ("__compact_old", "__compact_tmp"),
+    ("__rebuild_old", "__rebuild_tmp"),
+])
+def test_heal_dir_swap_recognises_the_fixed_legacy_names(
+        tmp_path, old_sfx, tmp_sfx):
+    from dask_patternsearch_spark.sources.io import heal_dir_swap
+
+    path = str(tmp_path / "d")
+    _mkdir_with(path + old_sfx, "orig")
+    _mkdir_with(path + tmp_sfx, "staged")
+    heal_dir_swap(path)
+    assert os.listdir(path) == ["orig"]
+    assert _siblings(path) == []
 
 
 def test_jsonl_shards_roundtrip_and_parallelism(spark, tmp_path):

@@ -1104,6 +1104,45 @@ def test_streaming_neardup_migrates_legacy_ledger_and_blooms(spark, tmp_path):
     assert not _g.glob(bands_path + ".compact-*")
 
 
+def test_streaming_neardup_heals_a_crashed_migration_swap(spark, tmp_path):
+    """A legacy-ledger migration that died between its two renames left
+    the ledger only in the .old sibling.  The next batch must restore and
+    migrate it, not read the missing ledger as "no ledger yet" (which
+    would keep a near-copy of the ledgered doc and later delete the
+    stranded sibling)."""
+    import glob as _g
+
+    import pandas as pd
+
+    from dask_patternsearch_spark.operators import dedup as bdedup
+    from dask_patternsearch_spark.streaming import dedup as sdedup
+
+    base = "spark shuffle partition broadcast join aggregate window stage task " * 8
+    uniq = ("stencil simplex reflect contract halving lattice orientation "
+            "incumbent poll round ledger dedup probe submit drain decide ") * 6
+    seed = spark.createDataFrame([(1, base)], "doc_id long, text string")
+    bands_path = str(tmp_path / "bands")
+    bdedup._band_buckets(
+        bdedup.minhash_signatures(seed), 8, 8
+    ).write.parquet(bands_path)
+    os.rename(bands_path, bands_path + ".old-0a1b")   # crash mid-swap
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    pd.DataFrame({"doc_id": [3, 4], "text": [base + " tail", uniq]}
+                 ).to_parquet(docs_dir / "x.parquet")
+    sdedup.neardup_filter_stream(
+        sdedup.read_docs_stream(spark, str(docs_dir)),
+        bands_path=bands_path,
+        kept_path=str(tmp_path / "kept"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+    )
+    kept = {r["doc_id"]
+            for r in spark.read.parquet(str(tmp_path / "kept")).collect()}
+    assert kept == {4}, "near-copy of the stranded-ledger doc must drop"
+    assert "bk" in spark.read.parquet(bands_path).columns
+    assert not _g.glob(bands_path + ".old-*")
+
+
 def test_streaming_keepers_auto_compact_runs_trigger(spark, tmp_path):
     """ingest_keepers_stream(auto_compact=True) runs the MinHash leg's
     maintenance trigger per micro-batch (quiet at tiny scale -- the
