@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..util import ensure_parallelism
+from . import bloom
 from .graph import checkpoint, fixpoint
 
 _TOKENIZE = r"\s+"
@@ -533,33 +534,22 @@ def _bands_bloom_dir(signatures_path: str) -> str:
 
 
 def _write_band_sidecar(sigs: DataFrame, signatures_path: str,
-                        n_bands: int, rows_per_band: int) -> None:
+                        n_bands: int, rows_per_band: int) -> int:
     """Overwrite the band sidecar + its bloom in the bucketed layout,
     width sized to the corpus band-row count (same 16/256/4096-dir
     tiers as the CDC ledger; a banding change or explicit rebuild is
-    the re-bucket point).  Callers hold the sidecar lock and manage the
-    meta stamp around this write.  Crash ordering: the bloom dir is
-    REMOVED first and swapped back in by atomic rename LAST, so a crash
-    anywhere leaves either no bloom (probes degrade to the unpruned
-    full-prefix read) or a complete one -- never a partial bloom whose
-    missing bits would silently drop real collisions."""
-    import os
+    the re-bucket point), and return the sidecar row count.  Callers
+    hold the sidecar lock and manage the meta stamp around this write.
+    The bloom dir is REMOVED before the sidecar is rewritten and built
+    afresh after it (:func:`rebuild_bands_bloom`, which states the crash
+    contract), so the old bloom never shadows the new rows."""
     import shutil
-    import uuid
 
     from ..sources.io import (DEFAULT_MAX_GROUP_BYTES,
                               DEFAULT_MAX_GROUP_ROWS, _row_group_options)
 
-    import glob as _glob
-
     sidecar = _bands_sidecar_path(signatures_path)
-    bdir = _bands_bloom_dir(signatures_path)
-    shutil.rmtree(bdir, ignore_errors=True)
-    # a previous rebuild's crash debris (bloom staged but never renamed
-    # in) is superseded by this rebuild -- reclaim it here, the only
-    # writer (callers hold the sidecar lock)
-    for leftover in _glob.glob(_glob.escape(bdir) + ".build-*"):
-        shutil.rmtree(leftover, ignore_errors=True)
+    shutil.rmtree(_bands_bloom_dir(signatures_path), ignore_errors=True)
     width = _pick_pfx_len(sigs.count() * n_bands)
     rows = (
         _band_buckets(sigs, n_bands, rows_per_band)
@@ -585,34 +575,87 @@ def _write_band_sidecar(sigs: DataFrame, signatures_path: str,
     return _rebuild_band_bloom(sigs.sparkSession, signatures_path, width)
 
 
-def _rebuild_band_bloom(spark, signatures_path: str, width: int) -> int:
-    """Rebuild the band bloom from the sidecar's full key set and swap
-    it in by atomic rename (a crash leaves either no bloom -- probes
-    degrade to the unpruned read -- or a complete one), recording the
-    sidecar row count in the meta so the geometric append schedule
-    knows when the ledger has doubled.  Callers hold the sidecar
-    lock."""
+def rebuild_bands_bloom(bdir: str, width: int, keys_for) -> None:
+    """Rebuild the band-bucket bloom at ``bdir`` at prefix ``width``
+    from the keys of the table it shadows: ``keys_for(pfxs)`` returns
+    that table's ``bkey`` column restricted to the prefixes ``pfxs``, or
+    all of it for ``None``.  Shared by the batch band sidecar and the
+    streaming band ledger; callers hold their writer lock.
+
+    Stranded ``.build-*`` staging dirs of a crashed rebuild are
+    superseded and removed first.  At an unchanged width the rebuild is
+    DELTA-PRESERVING: a prefix whose directory holds exactly one file is
+    already collapsed -- written by the last rebuild, or by the only
+    append that ever touched the prefix (appends land their bloom delta
+    before the rows it covers) -- so its file stays byte-identical at
+    the same path, and the driver residency cache and worker bloom LRU
+    keep serving it with zero re-reads.  Only multi-file prefixes are
+    rebuilt, from their own keys; the collapsed file is moved in before
+    the old ones are removed, so a reader never sees a covered prefix
+    rowless (a crash in between leaves a superset: false positives
+    only, collapsed by the next rebuild).  Otherwise (first build,
+    missing bloom, width change) the full rebuild is staged and swapped
+    in by rmtree + rename.  Crash contract: a crash in that window
+    leaves NO bloom dir, which probes treat as the unpruned (still
+    correct) read and the next writer heals by rebuilding -- never a
+    partial bloom whose missing bits would silently drop real
+    collisions."""
+    import contextlib
+    import glob
     import os
     import shutil
     import uuid
 
-    import glob as _glob
-
-    sidecar = _bands_sidecar_path(signatures_path)
-    bdir = _bands_bloom_dir(signatures_path)
-    # a previous rebuild's crash debris (staged but never renamed in) is
-    # superseded by this rebuild -- reclaim it here under the caller's
-    # lock, so the missing-bloom crash window never leaks build dirs
-    for leftover in _glob.glob(_glob.escape(bdir) + ".build-*"):
+    for leftover in glob.glob(glob.escape(bdir) + ".build-*"):
         shutil.rmtree(leftover, ignore_errors=True)
-    rows = _read_band_sidecar_full(spark, sidecar)
-    n_rows = rows.count()
-    btmp = bdir + ".build-" + uuid.uuid4().hex
-    _bloom_rows(
-        rows.select(_bands_key_expr().alias("bkey")), width, col="bkey"
-    ).write.mode("errorifexists").partitionBy("pfx").parquet(btmp)
-    shutil.rmtree(bdir, ignore_errors=True)
-    os.rename(btmp, bdir)
+    tmp = bdir + ".build-" + uuid.uuid4().hex
+    files = (_bloom_list_files(bdir)
+             if _layout_pfx_len(bdir) == width else None)
+    if files is None:
+        _bloom_rows(keys_for(None), width, col="bkey").write.mode(
+            "errorifexists").partitionBy("pfx").parquet(tmp)
+        shutil.rmtree(bdir, ignore_errors=True)
+        os.rename(tmp, bdir)
+        return
+    by_pfx: dict = {}
+    for f in files:
+        part = os.path.basename(os.path.dirname(f))
+        if "=" in part:
+            by_pfx.setdefault(part.split("=", 1)[1], []).append(f)
+    changed = sorted(p for p, fs in by_pfx.items() if len(fs) > 1)
+    if not changed:
+        return
+    _bloom_rows(keys_for(changed), width, col="bkey").write.mode(
+        "errorifexists").partitionBy("pfx").parquet(tmp)
+    for p in changed:
+        src = os.path.join(tmp, f"pfx={p}")
+        if os.path.isdir(src):
+            for fn in os.listdir(src):
+                if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                    os.rename(os.path.join(src, fn), os.path.join(
+                        bdir, f"pfx={p}", f"rebuilt-{uuid.uuid4().hex}-{fn}"))
+        for f in by_pfx[p]:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(f)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _rebuild_band_bloom(spark, signatures_path: str, width: int) -> int:
+    """Rebuild the band bloom from the sidecar through
+    :func:`rebuild_bands_bloom` (collapsing prefixes read
+    partition-pruned) and record the sidecar row count in the meta, so
+    the geometric append schedule knows when the sidecar has doubled.
+    Returns that count.  Callers hold the sidecar lock."""
+    sidecar = _bands_sidecar_path(signatures_path)
+    full = _read_band_sidecar_full(spark, sidecar)
+    n_rows = full.count()
+
+    def keys_for(pfxs):
+        rows = full if pfxs is None else _read_bucketed_pruned(
+            spark, sidecar, _BANDS_SIDECAR_KEY, pfxs, full.schema)
+        return rows.select(_bands_key_expr().alias("bkey"))
+
+    rebuild_bands_bloom(_bands_bloom_dir(signatures_path), width, keys_for)
     # record in the meta when one exists (the bulk overwrite paths write
     # their fresh meta AFTER this returns, carrying the returned count)
     _bump_bands_rebuild_meta(signatures_path, n_rows)
@@ -643,7 +686,10 @@ def _append_band_sidecar(band_rows: DataFrame, signatures_path: str) -> None:
     legacy flat sidecar stays flat (full-scan probes) until an explicit
     :func:`rebuild_band_sidecar`.  On the bucketed layout the bloom
     delta rows land FIRST (bloom ⊇ sidecar through any crash; a torn
-    bloom append only adds false-positive bits)."""
+    bloom append only adds false-positive bits), and a missing or
+    width-forked bloom is rebuilt first.  Once the sidecar has doubled
+    since the last rebuild, :func:`rebuild_bands_bloom` collapses the
+    delta rows."""
     import os
 
     sidecar = _bands_sidecar_path(signatures_path)
@@ -660,9 +706,7 @@ def _append_band_sidecar(band_rows: DataFrame, signatures_path: str) -> None:
         # heal a crashed rebuild (bloom dir removed, rename never
         # happened) or a width fork: without this the gate silently
         # stays off FOREVER -- probes stay correct but permanently
-        # degrade to unpruned prefix reads.  The rebuild also sweeps any
-        # stranded .build-* staging dirs (callers hold the sidecar lock,
-        # mirroring neardup_filter_stream's missing-bloom heal).
+        # degrade to unpruned prefix reads
         _rebuild_band_bloom(band_rows.sparkSession, signatures_path, width)
     if os.path.exists(bdir) and _layout_pfx_len(bdir) == width:
         _bloom_rows(
@@ -681,8 +725,9 @@ def _append_band_sidecar(band_rows: DataFrame, signatures_path: str) -> None:
     # touched prefix, and every probe ORs across its prefix's rows --
     # without collapse the per-batch bloom work grows linearly in batch
     # count (the class of creep this round removes everywhere else).
-    # Rebuild from the sidecar once it has doubled since the last
-    # rebuild: the full-key scan amortizes to O(1) per sidecar row.
+    # Collapse them once the sidecar has doubled since the last rebuild:
+    # the rebuild reads only the appended-to prefixes, amortized O(1)
+    # per sidecar row.
     import json
 
     spark = band_rows.sparkSession
@@ -746,18 +791,10 @@ def _read_band_sidecar(spark, signatures_path: str,
                 F.substring("bkey", 1, width).alias("p")
             ).distinct().collect()
         )
-    inferred = spark.read.parquet(sidecar).schema
-    fixed = T.StructType([
-        T.StructField(
-            f.name,
-            T.StringType() if f.name == _BANDS_SIDECAR_KEY else f.dataType,
-            f.nullable,
-        )
-        for f in inferred
-    ])
+    fixed = _read_band_sidecar_full(spark, sidecar).schema
     out = _read_bucketed_pruned(spark, sidecar, _BANDS_SIDECAR_KEY, pfxs,
                                 fixed)
-    if survivor_keys is not None and "bk" in inferred.fieldNames():
+    if survivor_keys is not None and "bk" in fixed.fieldNames():
         # push the (bloom-bounded) surviving keys to the scan: files are
         # sorted on bk, so the IN filter skips row groups by footer
         # min/max -- bytes ∝ matching row groups, not partition size.
@@ -3848,8 +3885,6 @@ def _cdc_ledger_path(state_dir: str) -> str:
 # 60-bit hash halves are computed as JVM expressions, and Python only
 # ever sees batch-bounded Arrow groups reduced with vectorized numpy.
 
-_CDC_BLOOM_K = 8              # probes per key
-_CDC_BLOOM_BITS_PER_KEY = 16  # m ~= 16n -> fpp ~5e-4 at k=8
 _CDC_BLOOM_SCHEMA = "pfx string, m long, bits binary"
 _CDC_LEDGER_SCHEMA = (
     "chunk_hash string, batch_seq long, batch_stamp string, pfx string"
@@ -3990,33 +4025,6 @@ def _with_pfx_halves(hashes: DataFrame, pfx_len: int,
     )
 
 
-def _bloom_m_for(n: int) -> int:
-    """Bloom size in bits for ``n`` keys: next power of two above
-    16 bits/key, clamped to [2^10, 2^27] (128 B .. 16 MB)."""
-    import math
-
-    target = max(_CDC_BLOOM_BITS_PER_KEY * max(n, 1), 1024)
-    return min(1 << math.ceil(math.log2(target)), 1 << 27)
-
-
-def _bloom_idx(h1: np.ndarray, h2: np.ndarray, m: int) -> np.ndarray:
-    ks = np.arange(_CDC_BLOOM_K, dtype=np.uint64)[None, :]
-    return (
-        (h1.astype(np.uint64)[:, None] + ks * h2.astype(np.uint64)[:, None])
-        % np.uint64(m)
-    ).astype(np.int64)
-
-
-def _bloom_might_contain(
-    h1: np.ndarray, h2: np.ndarray, m: int, bits: bytes
-) -> np.ndarray:
-    arr = np.frombuffer(bits, dtype=np.uint8)
-    idx = _bloom_idx(h1, h2, m)
-    return (((arr[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1) == 1).all(
-        axis=1
-    )
-
-
 def _bloom_rows(hashes: DataFrame, pfx_len: int,
                 col: str = "chunk_hash") -> DataFrame:
     """One delta bloom row per prefix covering exactly the distinct
@@ -4025,16 +4033,10 @@ def _bloom_rows(hashes: DataFrame, pfx_len: int,
     import pandas as pd
 
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        m = _bloom_m_for(len(pdf))
-        idx = _bloom_idx(
-            pdf["h1"].to_numpy(np.int64).astype(np.uint64),
-            pdf["h2"].to_numpy(np.int64).astype(np.uint64),
-            m,
-        )
+        m = bloom.size_for(len(pdf))
         arr = np.zeros(m // 8, dtype=np.uint8)
-        np.bitwise_or.at(
-            arr, idx >> 3, (np.uint8(1) << (idx & 7).astype(np.uint8))
-        )
+        bloom.set_bits(arr, pdf["h1"].to_numpy(np.int64),
+                       pdf["h2"].to_numpy(np.int64))
         return pd.DataFrame(
             {"pfx": [pdf["pfx"].iloc[0]], "m": [m], "bits": [arr.tobytes()]}
         )
@@ -4356,7 +4358,8 @@ def _bloom_filter_keys(spark, bdir: str, keys: DataFrame, pfx_len: int,
     with no rows for a prefix means NO candidates there: bloom delta
     rows always land before the data rows they cover (append order /
     rebuild order), so rowlessness proves the shadowed table is empty
-    under that prefix.  Served from the process-resident bits when
+    under that prefix (``bloom.might_contain`` over no rows is all
+    False).  Served from the process-resident bits when
     available (zero sidecar bytes on an unchanged dir -- see the
     residency block above); otherwise cogrouped per prefix so a bloom's
     bits travel to its batch keys once, never row-multiplied through a
@@ -4375,14 +4378,9 @@ def _bloom_filter_keys(spark, bdir: str, keys: DataFrame, pfx_len: int,
             for pdf in batches:
                 outs = []
                 for pfx, grp in pdf.groupby("pfx"):
-                    rows = bc.value.get(pfx)
-                    if not rows:
-                        continue  # rowless prefix: provably no candidates
-                    h1 = grp["h1"].to_numpy(np.int64).astype(np.uint64)
-                    h2 = grp["h2"].to_numpy(np.int64).astype(np.uint64)
-                    maybe = np.zeros(len(grp), dtype=bool)
-                    for mm, bb in rows:
-                        maybe |= _bloom_might_contain(h1, h2, mm, bb)
+                    maybe = bloom.might_contain(
+                        grp["h1"].to_numpy(np.int64),
+                        grp["h2"].to_numpy(np.int64), bc.value.get(pfx, ()))
                     outs.append(grp.loc[maybe, [col]])
                 yield (pd.concat(outs) if outs
                        else pdf.iloc[0:0][[col]])
@@ -4421,17 +4419,10 @@ def _bloom_filter_keys(spark, bdir: str, keys: DataFrame, pfx_len: int,
         def probe_grp(pdf: "pd.DataFrame") -> "pd.DataFrame":
             if len(pdf) == 0:
                 return pd.DataFrame({col: pd.Series([], dtype=object)})
-            rows = _worker_bloom_rows(
-                bc_paths.value.get(pdf["pfx"].iloc[0], []))
-            if not rows:
-                # rowless prefix: the shadowed table is provably empty
-                # there (delta rows land before the data they cover)
-                return pdf.iloc[0:0][[col]]
-            h1 = pdf["h1"].to_numpy(np.int64).astype(np.uint64)
-            h2 = pdf["h2"].to_numpy(np.int64).astype(np.uint64)
-            maybe = np.zeros(len(pdf), dtype=bool)
-            for mm, bits in rows:
-                maybe |= _bloom_might_contain(h1, h2, int(mm), bits)
+            maybe = bloom.might_contain(
+                pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64),
+                _worker_bloom_rows(
+                    bc_paths.value.get(pdf["pfx"].iloc[0], [])))
             return pdf.loc[maybe, [col]]
 
         return bh.groupBy("pfx").applyInPandas(probe_grp, f"{col} string")
@@ -4448,13 +4439,9 @@ def _bloom_filter_keys(spark, bdir: str, keys: DataFrame, pfx_len: int,
     def probe(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
         if len(left) == 0:
             return pd.DataFrame({col: pd.Series([], dtype=object)})
-        h1 = left["h1"].to_numpy(np.int64).astype(np.uint64)
-        h2 = left["h2"].to_numpy(np.int64).astype(np.uint64)
-        # no rows for this prefix => shadowed table empty there (see
-        # docstring) => nothing survives; otherwise OR across delta rows
-        maybe = np.zeros(len(left), dtype=bool)
-        for mm, bits in zip(right["m"], right["bits"]):
-            maybe |= _bloom_might_contain(h1, h2, int(mm), bits)
+        maybe = bloom.might_contain(
+            left["h1"].to_numpy(np.int64), left["h2"].to_numpy(np.int64),
+            zip(right["m"], right["bits"]))
         return left.loc[maybe, [col]]
 
     return (

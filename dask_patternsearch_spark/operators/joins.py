@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..util import ensure_parallelism
+from . import bloom
 
 _SALT = "__dps_salt"
 
@@ -229,25 +230,14 @@ def range_join(
 # Bloom-filter join (map-side probe pruning before the shuffle)
 # ---------------------------------------------------------------------------
 
-_BLOOM_HASH = "__dps_bloom_h"
+_BLOOM_H1, _BLOOM_H2 = "__dps_bloom_h1", "__dps_bloom_h2"
 
 
-def _bloom_positions(h: "np.ndarray", num_bits: int, num_hashes: int):
-    """Kirsch-Mitzenmacher double hashing: k bit positions per key from one
-    64-bit hash.  ``h`` is uint64; returns (num_hashes, len(h)) uint64 in
-    [0, num_bits).  Identical code runs on build and probe sides, so there
-    can be no cross-side hash mismatch (and thus no false negatives).
-    """
-    mask = np.uint64(num_bits - 1)
-    # splitmix64 finalizer mixes the second hash out of the first
-    z = h + np.uint64(0x9E3779B97F4A7C15)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    h2 = (z ^ (z >> np.uint64(31))) | np.uint64(1)  # odd => full period mod 2^m
-    out = np.empty((num_hashes, len(h)), dtype=np.uint64)
-    for i in range(num_hashes):
-        out[i] = (h + np.uint64(i) * h2) & mask
-    return out
+def _bloom_hashes(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` plus the two 64-bit hashes ``bloom`` indexes by, as JVM
+    columns: ``h1 = xxhash64(keys)`` and ``h2 = xxhash64(h1)``."""
+    return df.withColumn(_BLOOM_H1, F.xxhash64(*keys)).withColumn(
+        _BLOOM_H2, F.xxhash64(_BLOOM_H1))
 
 
 def bloom_join(
@@ -256,7 +246,6 @@ def bloom_join(
     on: str | list[str],
     how: str = "inner",
     num_bits: int = 1 << 23,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Equi join with an explicit Bloom-filter pre-filter on the probe side.
 
@@ -272,21 +261,24 @@ def bloom_join(
     across Python-UDF boundaries; this operator is the unconditional,
     composable spelling.
 
-    Mechanics: one JVM-side ``xxhash64`` over the key column(s) on BOTH
-    sides (codegen, no Python in the common path); the build side's
-    distinct hashes fold into per-partition numpy bitsets inside
-    ``mapInPandas`` (one binary row out per partition), OR-merged on the
-    driver and rebroadcast; a vectorized pandas UDF tests the k bit
-    positions per probe row.  Bloom filters have no false negatives, so
+    Mechanics: two JVM-side hashes on BOTH sides, ``h1 = xxhash64(keys)``
+    and ``h2 = xxhash64(h1)`` (codegen, no Python in the common path),
+    index the package's one bit layout (``operators.bloom``, k = 8
+    probes); the build side's hashes fold into per-partition numpy
+    bitsets inside ``mapInPandas`` (one binary row out per partition),
+    OR-merged on the driver and rebroadcast; a vectorized pandas UDF
+    tests each probe row.  Bloom filters have no false negatives, so
     the inner/left join result is EXACTLY the plain join's -- false
-    positives only waste shuffle rows (fpp ~ (1-e^(-kn/m))^k; size
-    ``num_bits`` >= ~10x distinct build keys for ~1% at k=5).
+    positives only waste shuffle rows (fpp ~ (1-e^(-kn/m))^k: ~1% at
+    ``num_bits`` = 10x distinct build keys, ~5e-4 at 16x).
 
-    ``num_bits`` must be a power of two.  ``how``: inner / left_semi (the
-    probe-preserving shapes where pruning is sound).
+    ``num_bits`` must be a power of two, at least 8 (one byte).  ``how``:
+    inner / left_semi (the probe-preserving shapes where pruning is
+    sound).
     """
-    if num_bits & (num_bits - 1):
-        raise ValueError(f"num_bits must be a power of two, got {num_bits}")
+    if num_bits < 8 or num_bits & (num_bits - 1):
+        raise ValueError(
+            f"num_bits must be a power of two >= 8, got {num_bits}")
     if how not in ("inner", "left_semi", "semi"):
         raise ValueError(f"bloom_join supports inner/left_semi, got {how!r}")
     keys = [on] if isinstance(on, str) else list(on)
@@ -296,15 +288,14 @@ def bloom_join(
     # the result.  coalesce bounds the collect: every partition yields a
     # full num_bits/8-byte bitset row regardless of its data, so the
     # driver receives at most 8 * m/8 bytes
-    build_hashes = build.select(F.xxhash64(*keys).alias(_BLOOM_HASH)).coalesce(8)
+    build_hashes = _bloom_hashes(build, keys).select(
+        _BLOOM_H1, _BLOOM_H2).coalesce(8)
 
     def _partition_bitsets(batches):
         bits = np.zeros(num_bits // 8, dtype=np.uint8)
         for pdf in batches:
-            h = pdf[_BLOOM_HASH].to_numpy(dtype=np.int64).view(np.uint64)
-            pos = _bloom_positions(h, num_bits, num_hashes).ravel()
-            np.bitwise_or.at(bits, pos >> np.uint64(3),
-                             np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
+            bloom.set_bits(bits, pdf[_BLOOM_H1].to_numpy(np.int64),
+                           pdf[_BLOOM_H2].to_numpy(np.int64))
         yield pd.DataFrame({"bits": [bits.tobytes()]})
 
     partials = build_hashes.mapInPandas(
@@ -317,16 +308,10 @@ def bloom_join(
     bc = spark.sparkContext.broadcast(merged.tobytes())
 
     @F.pandas_udf("boolean")
-    def might_contain(h: pd.Series) -> pd.Series:
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-        pos = _bloom_positions(hv, num_bits, num_hashes)
-        ok = np.ones(len(hv), dtype=bool)
-        for i in range(num_hashes):
-            p = pos[i]
-            ok &= (bits[(p >> np.uint64(3)).astype(np.int64)]
-                   >> (p & np.uint64(7)).astype(np.uint8)) & 1 > 0
-        return pd.Series(ok)
+    def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
+        return pd.Series(bloom.might_contain(
+            h1.to_numpy(np.int64), h2.to_numpy(np.int64),
+            [(num_bits, bc.value)]))
 
     # the vectorized probe must not inherit a 1-task scan (a single small
     # parquet file would serialize the whole filter through one Python
@@ -334,9 +319,9 @@ def bloom_join(
     # ensure_parallelism is a no-op, so this does NOT reintroduce a
     # fact-table shuffle where it matters
     pruned = (
-        ensure_parallelism(probe.withColumn(_BLOOM_HASH, F.xxhash64(*keys)))
-        .filter(might_contain(F.col(_BLOOM_HASH)))
-        .drop(_BLOOM_HASH)
+        ensure_parallelism(_bloom_hashes(probe, keys))
+        .filter(might_contain(F.col(_BLOOM_H1), F.col(_BLOOM_H2)))
+        .drop(_BLOOM_H1, _BLOOM_H2)
     )
     join_how = "left_semi" if how in ("left_semi", "semi") else "inner"
     return pruned.join(build, keys, join_how)

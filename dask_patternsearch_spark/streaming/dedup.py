@@ -26,10 +26,12 @@ ledger bytes ∝ the batch's true collision mass, not the ledger.  Bloom
 deltas land BEFORE the band rows they cover (superset through any
 replay) and are collapsed by a GEOMETRIC rebuild (when the ledger
 doubles since the last rebuild -- amortized O(1) per row, so the
-rebuild never becomes a per-batch corpus term).  A pre-round-12 ledger
-is migrated in place on first contact (one clustered rewrite + bloom
-build, moved in by ``sources.io.swap_dir`` and crash-healed by
-``sources.io.heal_dir_swap``).  Plain
+rebuild never becomes a per-batch corpus term).  The rebuild is the
+batch sidecar's ``operators.dedup.rebuild_bands_bloom``: it keeps the
+files of prefixes no batch touched, and states the crash contract.
+A pre-round-12 ledger is migrated in place on first contact (one
+clustered rewrite + bloom build, moved in by ``sources.io.swap_dir``
+and crash-healed by ``sources.io.heal_dir_swap``).  Plain
 parquet append keeps this container-friendly; at real scale the same
 body targets Delta/Iceberg (atomic append) or a key-value store -- the
 structure is what carries over, exactly as for
@@ -63,17 +65,17 @@ def neardup_filter_stream(
     in ``bands_path`` (clustered on the 60-bit band-bucket key), with a
     bloom sidecar at ``bands_path + ".bloom"``.
     """
+    import functools
     import json
+    import operator
     import os
-    import shutil
-    import uuid
 
     from ..operators.dedup import (_BANDS_KEY_ISIN_MAX, _atomic_json_write,
                                    _band_buckets, _bands_bk_expr,
                                    _bands_key_expr, _bloom_filter_keys,
-                                   _bloom_list_files, _bloom_rows,
-                                   _layout_pfx_len, _pick_pfx_len,
-                                   minhash_signatures)
+                                   _bloom_rows, _layout_pfx_len,
+                                   _pick_pfx_len, minhash_signatures,
+                                   rebuild_bands_bloom)
     from ..sources.io import (DEFAULT_MAX_GROUP_BYTES, DEFAULT_MAX_GROUP_ROWS,
                               _row_group_options, heal_dir_swap, staging_dir,
                               swap_dir)
@@ -102,91 +104,27 @@ def neardup_filter_stream(
         ).parquet(path)
 
     def _rebuild_bloom(sp, n_rows: int) -> None:
-        """Collapse the per-batch bloom deltas to one right-sized row per
-        prefix (and cover any rows the deltas predate -- the migration
-        case), record the ledger size the rebuild saw.  Called on a
-        GEOMETRIC schedule (ledger doubled).  The rebuild is also the
-        RE-BUCKET point: the new width is sized to the ledger row count.
-
-        DELTA-PRESERVING (round-13 verdict #6) when the width is
-        unchanged: a prefix whose directory holds exactly ONE delta file
-        is already collapsed -- its file was produced either by the last
-        rebuild (and no append touched the prefix since: every ledger
-        append lands its delta first) or by the single batch that ever
-        wrote the prefix, so it covers exactly the prefix's ledger keys
-        at the per-prefix right-sizing a rebuild would choose.  Such
-        prefixes are SKIPPED: their files stay byte-identical at the
-        same paths, so the driver residency cache and the worker-process
-        bloom LRU keep serving them with zero re-reads.  Only multi-file
-        prefixes collapse, their ledger slice read through the bk
-        row-group pushdown (bk is the key's first 60 bits, so a prefix
-        is one contiguous bk range) -- rebuild cost ∝ appended-to
-        prefixes' ledger mass, not the corpus.  Per-prefix swap is
-        crash-safe without the whole-dir rename: the collapsed file is
-        MOVED IN before the old files are removed, so a reader never
-        sees a covered prefix rowless (extra rows are fp-only, cleaned
-        by the next rebuild).  A width change (or first build) still
-        takes the full rebuild + atomic dir swap."""
+        """Rebuild the bloom at the width sized to the ledger (the
+        RE-BUCKET point) through :func:`rebuild_bands_bloom` -- a
+        collapsing prefix is one contiguous bk range, read through the
+        row-group pushdown, so a width-stable rebuild costs ∝ the
+        appended-to prefixes' ledger mass -- and record the ledger size
+        the rebuild saw.  Called on a GEOMETRIC schedule (ledger
+        doubled) and to cover a migrated or bloomless ledger."""
         w = _pick_pfx_len(n_rows)
-        cur_w = _layout_pfx_len(bdir) if os.path.exists(bdir) else None
-        if cur_w == w:
-            by_pfx: dict = {}
-            for f in (_bloom_list_files(bdir) or set()):
-                part = os.path.basename(os.path.dirname(f))
-                if "=" in part:
-                    by_pfx.setdefault(part.split("=", 1)[1], []).append(f)
-            changed = sorted(p for p, fs in by_pfx.items() if len(fs) > 1)
-            if not changed:
-                _atomic_json_write(meta_path, {"rows_at_rebuild": n_rows})
-                return
-            span = 16 ** (15 - w)
+        span = 16 ** (15 - w)
+
+        def keys_for(pfxs):
             ledger = sp.read.parquet(bands_path)
-            if len(changed) <= 64:
-                import functools
-                cond = functools.reduce(
-                    lambda a, b: a | b,
-                    [
-                        (F.col("bk") >= int(p, 16) * span)
-                        & (F.col("bk") < (int(p, 16) + 1) * span)
-                        for p in changed
-                    ],
-                )
-                ledger = ledger.filter(cond)
-            keys = ledger.select(_bands_key_expr().alias("bkey"))
-            tmp = bdir + ".build-" + uuid.uuid4().hex
-            _bloom_rows(keys, w, col="bkey").write.mode(
-                "errorifexists").partitionBy("pfx").parquet(tmp)
-            for p in changed:
-                src = os.path.join(tmp, f"pfx={p}")
-                dst = os.path.join(bdir, f"pfx={p}")
-                os.makedirs(dst, exist_ok=True)
-                if os.path.isdir(src):
-                    for fn in os.listdir(src):
-                        if fn.endswith(".parquet") and not fn.startswith(
-                                ("_", ".")):
-                            os.rename(
-                                os.path.join(src, fn),
-                                os.path.join(
-                                    dst,
-                                    f"rebuilt-{uuid.uuid4().hex}-{fn}"),
-                            )
-                # old deltas removed only after the collapsed row is
-                # visible; a crash in between leaves a superset (fp only)
-                for f in by_pfx[p]:
-                    try:
-                        os.remove(f)
-                    except FileNotFoundError:
-                        pass
-            shutil.rmtree(tmp, ignore_errors=True)
-            _atomic_json_write(meta_path, {"rows_at_rebuild": n_rows})
-            return
-        keys = sp.read.parquet(bands_path).select(
-            _bands_key_expr().alias("bkey"))
-        tmp = bdir + ".build-" + uuid.uuid4().hex
-        _bloom_rows(keys, w, col="bkey").write.mode(
-            "errorifexists").partitionBy("pfx").parquet(tmp)
-        shutil.rmtree(bdir, ignore_errors=True)
-        os.rename(tmp, bdir)
+            if pfxs is not None and len(pfxs) <= 64:
+                ledger = ledger.filter(functools.reduce(operator.or_, [
+                    (F.col("bk") >= int(p, 16) * span)
+                    & (F.col("bk") < (int(p, 16) + 1) * span)
+                    for p in pfxs
+                ]))
+            return ledger.select(_bands_key_expr().alias("bkey"))
+
+        rebuild_bands_bloom(bdir, w, keys_for)
         _atomic_json_write(meta_path, {"rows_at_rebuild": n_rows})
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -568,25 +568,18 @@ def test_bloom_join_actually_prunes(spark):
     # superset must stay within 1% of the true matches
     import numpy as np
 
+    from dask_patternsearch_spark.operators import bloom
+
     bits = 1 << 23
-    h = li.select(F.xxhash64("o_orderkey").alias("h")).toPandas()["h"]
-    keys = few.toPandas()["o_orderkey"]
-    hs = h.to_numpy(dtype=np.int64).view(np.uint64)
-    build_h = (
-        few.sparkSession.createDataFrame(keys.to_frame())
-        .select(F.xxhash64("o_orderkey").alias("h"))
-        .toPandas()["h"]
-        .to_numpy(dtype=np.int64)
-        .view(np.uint64)
-    )
     bitset = np.zeros(bits // 8, dtype=np.uint8)
-    pos = J._bloom_positions(build_h, bits, 5).ravel()
-    np.bitwise_or.at(bitset, pos >> np.uint64(3), np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
-    pp = J._bloom_positions(hs, bits, 5)
-    ok = np.ones(len(hs), dtype=bool)
-    for i in range(5):
-        p = pp[i]
-        ok &= (bitset[(p >> np.uint64(3)).astype(np.int64)] >> (p & np.uint64(7)).astype(np.uint8)) & 1 > 0
+    b = J._bloom_hashes(few, ["o_orderkey"]).toPandas()
+    bloom.set_bits(bitset, b[J._BLOOM_H1].to_numpy(np.int64),
+                   b[J._BLOOM_H2].to_numpy(np.int64))
+    p = J._bloom_hashes(li, ["o_orderkey"]).select(
+        J._BLOOM_H1, J._BLOOM_H2).toPandas()
+    ok = bloom.might_contain(p[J._BLOOM_H1].to_numpy(np.int64),
+                             p[J._BLOOM_H2].to_numpy(np.int64),
+                             [(bits, bitset.tobytes())])
     assert ok.sum() <= n_match + max(0.01 * n_probe, 1)
 
 
@@ -596,6 +589,8 @@ def test_bloom_join_validates_args(spark):
     df = spark.range(1)
     with pytest.raises(ValueError, match="power of two"):
         bloom_join(df, df, "id", num_bits=1000)
+    with pytest.raises(ValueError, match="power of two"):
+        bloom_join(df, df, "id", num_bits=4)  # a zero-byte bitset
     with pytest.raises(ValueError, match="inner/left_semi"):
         bloom_join(df, df, "id", how="full_outer")
 
@@ -4424,6 +4419,53 @@ def test_band_bloom_heals_on_append_after_crashed_rebuild(spark, tmp_path):
         .select("band", "bucket").limit(1).localCheckpoint(eager=True))
     assert dedup._read_band_sidecar(
         spark, sig_path, dup_bucket).count() > 0
+
+
+def test_band_sidecar_rebuild_preserves_unchanged_prefixes(spark, tmp_path):
+    """The batch sidecar's geometric bloom rebuild is delta-preserving at
+    an unchanged width, like the streaming ledger's: a prefix the append
+    did not touch keeps its one file at the same path with the same
+    bytes, and every prefix ends with one file."""
+    import hashlib
+    import json
+    import os
+
+    docs = _mk_docs(spark, _near_dup_rows(43, 120))
+    sig_path = str(tmp_path / "sigs.parquet")
+    dedup.minhash_lsh_candidates(
+        docs.filter("doc_id < 4"), persist_signatures=sig_path).collect()
+    bdir = dedup._bands_bloom_dir(sig_path)
+    meta = dedup._bands_meta_path(sig_path)
+
+    def snap():
+        out = {}
+        for f in sorted(dedup._bloom_list_files(bdir)):
+            pfx = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
+            with open(f, "rb") as fh:
+                out.setdefault(pfx, []).append(
+                    (f, hashlib.md5(fh.read()).hexdigest()))
+        return out
+
+    before = snap()
+    with open(meta) as fh:
+        rows_before = json.load(fh)["rows_at_rebuild"]
+    batch = docs.filter("doc_id >= 4 AND doc_id < 8")
+    width = dedup._layout_pfx_len(bdir)
+    touched = {
+        r["p"] for r in dedup._band_buckets(
+            dedup.minhash_signatures(batch), 8, 8)
+        .select(F.substring(dedup._bands_key_expr(), 1, width).alias("p"))
+        .distinct().collect()
+    }
+    dedup.incremental_minhash_candidates(batch, sig_path, append=True).collect()
+    with open(meta) as fh:  # the append doubled the sidecar: rebuild fired
+        assert json.load(fh)["rows_at_rebuild"] >= 2 * rows_before
+    after = snap()
+    untouched = set(before) - touched
+    assert untouched, "test premise: some prefix saw no append"
+    for pfx in untouched:
+        assert after[pfx] == before[pfx]
+    assert all(len(fs) == 1 for fs in after.values())
 
 
 def test_band_bloom_appends_collapse_geometrically(spark, tmp_path):

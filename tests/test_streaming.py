@@ -545,6 +545,38 @@ def test_streaming_neardup_rebuild_preserves_unchanged_prefixes(
     assert kept == {1, 100, 8}
 
 
+def test_streaming_neardup_rebuild_sweeps_stranded_build_dirs(spark,
+                                                            tmp_path):
+    """A crashed bloom rebuild strands its ``.build-*`` staging dir; the
+    next rebuild (here the width-stable one a doubled ledger fires) must
+    remove it, as the batch sidecar's rebuild does."""
+    import glob
+
+    import pandas as pd
+
+    from dask_patternsearch_spark.streaming import dedup as sdedup
+
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    bands_path = str(tmp_path / "bands")
+    kept_path = str(tmp_path / "kept")
+    ckpt = str(tmp_path / "ckpt")
+
+    def stream(name, doc_id, text):
+        pd.DataFrame({"doc_id": [doc_id], "text": [text]}).to_parquet(
+            docs_dir / name)
+        sdedup.neardup_filter_stream(
+            sdedup.read_docs_stream(spark, str(docs_dir)),
+            bands_path=bands_path, kept_path=kept_path, checkpoint_path=ckpt)
+
+    stream("a.parquet", 1, "alpha beta gamma delta epsilon zeta eta " * 8)
+    os.makedirs(bands_path + ".bloom.build-deadbeef")
+    stream("b.parquet", 2, "stencil simplex reflect contract halving " * 8)
+    assert glob.glob(glob.escape(bands_path) + ".bloom.build-*") == []
+    kept = {r["doc_id"] for r in spark.read.parquet(kept_path).collect()}
+    assert kept == {1, 2}
+
+
 def test_streaming_neardup_idempotent_restart(spark, tmp_path):
     """availableNow + checkpoint: a second run over the same input adds
     nothing (exactly-once per input file)."""
