@@ -7,12 +7,12 @@ of dask futures and greedily accepts the best result as soon as it arrives.
 Spark jobs are synchronous barriers, so this engine runs the published
 *batch-synchronous* variant of generating-set search: each iteration ("poll
 round") materializes a set of deduplicated trial points, evaluates them all
-in one Spark job (``mapInPandas`` -- Arrow-vectorized), then makes the
-accept/contract decision on the driver.  The reference itself notes that its
-greedy-async acceptance policy is a replaceable choice
-(``search.py:326-329``); the lattice + poll-set contraction gate that
-convergence theory actually requires (Kolda/Lewis/Torczon, SIREV 2003) is
-preserved exactly:
+in one single-stage Spark job (an RDD ``mapPartitions``, vectorized numpy
+inside each task), then makes the accept/contract decision on the driver.
+The reference itself notes that its greedy-async acceptance policy is a
+replaceable choice (``search.py:326-329``); the lattice + poll-set
+contraction gate that convergence theory actually requires
+(Kolda/Lewis/Torczon, SIREV 2003) is preserved exactly:
 
 * all coordinates snap to a dyadic lattice of spacing
   ``stepsize / 2**max_halvings`` before identity is computed
@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import math
 from collections import deque
-from time import time
+from time import perf_counter, time
 
 import numpy as np
 
@@ -62,12 +62,15 @@ class TrialPoint:
 
     Mirrors the reference's ``Point`` record (``search.py:15-31``): identity
     is the lattice-snapped coordinate bytes, which is exact because every
-    point is snapped before construction.
+    point is snapped before construction.  ``point`` is never mutated
+    after construction, so its hash is computed once (the fill loop looks
+    each candidate up several times); unpickling recomputes it, because
+    ``bytes`` hashes differ between processes.
     """
 
     __slots__ = (
         "point", "halvings", "parent", "is_accepted", "result",
-        "start_time", "stop_time",
+        "start_time", "stop_time", "_hash",
     )
 
     def __init__(self, point: np.ndarray, halvings: int):
@@ -78,9 +81,18 @@ class TrialPoint:
         self.result = None
         self.start_time = None
         self.stop_time = None
+        self._hash = hash(point.tobytes())
+
+    def __getstate__(self):
+        return {k: getattr(self, k) for k in self.__slots__ if k != "_hash"}
+
+    def __setstate__(self, state):
+        for k, v in state.items():
+            setattr(self, k, v)
+        self._hash = hash(self.point.tobytes())
 
     def __hash__(self) -> int:
-        return hash(self.point.tobytes())
+        return self._hash
 
     def __eq__(self, other) -> bool:
         return np.array_equal(self.point, other.point)
@@ -206,15 +218,30 @@ class SparkEvaluator:
     paid Catalyst analysis + Arrow plan execution per round (~1.5x the
     per-job latency, measured on local[32]); per-round results are a few
     hundred floats, so Arrow's columnar transfer buys nothing here.
-    Partition count is sized so every core gets work:
-    ``min(n_candidates, defaultParallelism)`` unless an explicit
-    ``batchsize`` dictates fewer, larger tasks.
+
+    Task count is sized from the previous call's measured cost.  Every
+    task times its objective call and the driver times the job, which
+    gives ``s_per_point`` (objective seconds per point) and ``fixed_s``
+    (the job's wall time minus its slowest task's objective time: what a
+    job costs beyond evaluation).  The first call uses
+    ``min(n_candidates, defaultParallelism)`` tasks; each later call uses
+    ``floor(n_candidates * s_per_point / fixed_s)`` within ``[1, that
+    cap]``, so each task carries at least one job's fixed cost of
+    objective work and a cheap objective runs as a single task.  An
+    explicit ``batchsize`` keeps ``ceil(n_candidates / batchsize)``.
+    With ``vectorize``, the rows that share one objective call therefore
+    vary from call to call (and with the cluster size): a vectorized
+    objective's per-row values must not depend on which rows share a
+    call.
     """
 
     def __init__(self, spark, vectorize: bool = False, batchsize: int | None = None):
         self.spark = spark
         self.vectorize = vectorize
         self.batchsize = batchsize
+        # the previous call's measured cost (None before the first call)
+        self.s_per_point: float | None = None
+        self.fixed_s: float | None = None
 
     # Candidate matrices up to this many bytes ride in the task closure;
     # larger rounds go through a torrent broadcast instead (closures are
@@ -225,10 +252,14 @@ class SparkEvaluator:
         if not points:
             return []
         vectorize = self.vectorize
+        n = len(points)
         if self.batchsize:
-            n_parts = max(1, math.ceil(len(points) / self.batchsize))
+            n_parts = max(1, math.ceil(n / self.batchsize))
         else:
-            n_parts = max(1, min(len(points), self.spark.sparkContext.defaultParallelism))
+            n_parts = max(1, min(n, self.spark.sparkContext.defaultParallelism))
+            if self.s_per_point is not None:
+                n_parts = max(1, min(n_parts, math.floor(
+                    n * self.s_per_point / self.fixed_s)))
 
         # One SINGLE-STAGE job per round: the candidate matrix travels to
         # executors via closure/broadcast; the job itself partitions the
@@ -247,19 +278,25 @@ class SparkEvaluator:
             if ids.size == 0:
                 return
             xs = np.asarray(get_xs(), dtype=float)[ids]
+            t0 = perf_counter()
             if vectorize:
                 out = np.asarray(func(xs, *args), dtype=float)
             else:
                 out = np.array([func(x, *args) for x in xs], dtype=float)
-            yield ids, out
+            yield ids, out, perf_counter() - t0
 
+        t0 = perf_counter()
         parts = self.spark.sparkContext.parallelize(
-            range(len(points)), n_parts
+            range(n), n_parts
         ).mapPartitions(run).collect()
+        wall_s = perf_counter() - t0
         if bc is not None:
             bc.unpersist()
-        costs: list[float] = [math.nan] * len(points)
-        for ids, vals in parts:
+        eval_s = [e for _ids, _vals, e in parts]
+        self.s_per_point = sum(eval_s) / n
+        self.fixed_s = max(1e-6, wall_s - max(eval_s))
+        costs: list[float] = [math.nan] * n
+        for ids, vals, _e in parts:
             for i, v in zip(ids.tolist(), vals.tolist()):
                 costs[i] = v
         return costs
@@ -373,8 +410,9 @@ def search(
         must accept a 2-D array of points and return a 1-D array.
     x0, stepsize : 1-D array-likes of equal length.
     spark : SparkSession or None.  None runs in-process (serial mode,
-        reference trace C); a session distributes evaluation via
-        ``mapInPandas``.
+        reference trace C); a session evaluates each round (or fused
+        chunk of rounds) as one single-stage RDD ``mapPartitions`` job
+        (:class:`SparkEvaluator`).
     round_size : trial points evaluated per round.  Default
         ``max(3*dims, defaultParallelism)`` with a session, ``3*dims``
         without (the reference's queue-depth default, ``search.py:133-139``).

@@ -259,6 +259,72 @@ def test_pipelined_serial_fuses_rounds_per_evaluate_call():
 
 
 @pytest.mark.spark
+def test_spark_evaluator_sizes_tasks_by_measured_cost(spark):
+    """The first job of a search has ``min(n, defaultParallelism)`` tasks;
+    later jobs size themselves from the previous job's measured objective
+    and fixed cost: a cheap objective drops to one task per job (with the
+    same ledger), a costly one keeps every core, and an explicit
+    ``batchsize`` keeps ``ceil(n / batchsize)``."""
+    import math
+    import time
+
+    from dask_patternsearch_spark.search import SparkEvaluator
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    par = sc.defaultParallelism
+
+    class Recording(SparkEvaluator):
+        def evaluate(self, func, points, args):
+            self.sizes.append(len(points))
+            return super().evaluate(func, points, args)
+
+    def run(group, func, batchsize=None, vectorize=False, **kw):
+        ev = Recording(spark, vectorize=vectorize, batchsize=batchsize)
+        ev.sizes = []
+        sc.setJobGroup(group, group)
+        try:
+            _b, results = search(func, X0, STEP, evaluator=ev, batchsize=batchsize,
+                                 vectorize=vectorize, seed=7, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tasks = [sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
+                 for j in sorted(st.getJobIdsForGroup(group))]
+        assert len(tasks) == len(ev.sizes) == results.jobs > 1
+        return results, ev.sizes, tasks
+
+    def canon(res):
+        return sorted(
+            (tp.point.tobytes(), tp.halvings, float(c)) for tp, c in res.items()
+        )
+
+    # closures, so cloudpickle ships them by value to the executors
+    def obj_vec(x):
+        return (x * x).sum(axis=1)
+
+    cheap, sizes, tasks = run("sizing-cheap", obj_vec, vectorize=True,
+                              round_size=6, stopratio=0.05)
+    assert tasks == [min(sizes[0], par)] + [1] * (len(tasks) - 1)
+    _sb, serial = search(sphere, X0, STEP, seed=7, round_size=6, stopratio=0.05)
+    assert canon(cheap) == canon(serial)
+
+    def slow(x):
+        time.sleep(0.2)
+        return float((x * x).sum())
+
+    # 16 points over 4 cores: 0.8 s of objective work per task, well above
+    # a job's fixed cost (about 0.3 s on a 4-core box)
+    _r, sizes, tasks = run("sizing-costly", slow, round_size=16, max_tasks=32)
+    assert tasks == [min(n, par) for n in sizes]
+
+    _r, sizes, tasks = run("sizing-batch", obj_vec, batchsize=16,
+                           vectorize=True, round_size=48, max_tasks=9)
+    assert tasks == [math.ceil(n / 16) for n in sizes]
+    assert all(t == 3 for t in tasks)
+
+
+@pytest.mark.spark
 def test_async_spark_evaluator_is_a_compatible_spark_evaluator(spark):
     """The kept ``AsyncSparkEvaluator`` name still constructs with
     ``max_inflight`` and searches exactly like the default evaluator."""
@@ -471,6 +537,30 @@ def test_ledger_checkpoint_and_resume_100d(tmp_path):
     # must strictly improve on the interrupted stage
     assert best2.result < best1.result
     assert best2.result == min(results2.values())
+
+
+def test_pickled_ledger_lookups_work_in_another_process(tmp_path):
+    """``TrialPoint`` caches its hash, and ``bytes`` hashes differ between
+    processes: a ledger unpickled in a process with another hash seed must
+    still find its points."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    _b, results = search(sphere, X0, STEP, max_tasks=20, seed=7)
+    path = tmp_path / "ledger.pkl"
+    path.write_bytes(pickle.dumps(results))
+    code = (
+        "import pickle, sys\n"
+        "from dask_patternsearch_spark.search import TrialPoint\n"
+        "res = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "assert all(TrialPoint(tp.point.copy(), 0) in res for tp in res)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for hash_seed in ("1", "2"):
+        subprocess.run([sys.executable, "-c", code, str(path)], check=True, cwd=root,
+                       env={**os.environ, "PYTHONHASHSEED": hash_seed})
 
 
 def test_deterministic_serial_trace_is_replayable():
