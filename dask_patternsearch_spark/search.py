@@ -219,16 +219,23 @@ class SparkEvaluator:
     per-job latency, measured on local[32]); per-round results are a few
     hundred floats, so Arrow's columnar transfer buys nothing here.
 
-    Task count is sized from the previous call's measured cost.  Every
-    task times its objective call and the driver times the job, which
-    gives ``s_per_point`` (objective seconds per point) and ``fixed_s``
-    (the job's wall time minus its slowest task's objective time: what a
-    job costs beyond evaluation).  The first call uses
-    ``min(n_candidates, defaultParallelism)`` tasks; each later call uses
-    ``floor(n_candidates * s_per_point / fixed_s)`` within ``[1, that
-    cap]``, so each task carries at least one job's fixed cost of
-    objective work and a cheap objective runs as a single task.  An
-    explicit ``batchsize`` keeps ``ceil(n_candidates / batchsize)``.
+    Task count is sized from measured cost.  Every task times its
+    objective call and the driver times the job, which gives
+    ``s_per_point`` (objective seconds per point) and ``fixed_s`` (the
+    job's wall time minus its slowest task's objective time: what a job
+    costs beyond evaluation -- scheduling, shipping the closure and the
+    results, and the Python worker's per-task set-up, which
+    ``worker_daemon`` keeps from re-reading Spark's zip archives).  The
+    first two calls use ``min(n_candidates, defaultParallelism)`` tasks;
+    each later call uses ``floor(n_candidates * s_per_point / fixed_s)``
+    within ``[1, that cap]``, with the last call's ``s_per_point`` and the
+    smaller of the last two ``fixed_s``, so each task carries at least one
+    job's fixed cost of objective work and a cheap objective runs as a
+    single task.  Two measurements, because the first job on a fresh
+    session also starts the Python workers (1.8 s against under 0.1 s
+    later, on a 4-core box), which would starve the next call of a
+    costly objective.  An explicit ``batchsize`` keeps
+    ``ceil(n_candidates / batchsize)``.
     With ``vectorize``, the rows that share one objective call therefore
     vary from call to call (and with the cluster size): a vectorized
     objective's per-row values must not depend on which rows share a
@@ -239,9 +246,10 @@ class SparkEvaluator:
         self.spark = spark
         self.vectorize = vectorize
         self.batchsize = batchsize
-        # the previous call's measured cost (None before the first call)
+        # the last call's objective cost per point and the last two calls'
+        # fixed cost, oldest first (empty before the first call)
         self.s_per_point: float | None = None
-        self.fixed_s: float | None = None
+        self.fixed_s: tuple[float, ...] = ()
 
     # Candidate matrices up to this many bytes ride in the task closure;
     # larger rounds go through a torrent broadcast instead (closures are
@@ -257,9 +265,9 @@ class SparkEvaluator:
             n_parts = max(1, math.ceil(n / self.batchsize))
         else:
             n_parts = max(1, min(n, self.spark.sparkContext.defaultParallelism))
-            if self.s_per_point is not None:
+            if len(self.fixed_s) == 2:
                 n_parts = max(1, min(n_parts, math.floor(
-                    n * self.s_per_point / self.fixed_s)))
+                    n * self.s_per_point / min(self.fixed_s))))
 
         # One SINGLE-STAGE job per round: the candidate matrix travels to
         # executors via closure/broadcast; the job itself partitions the
@@ -294,7 +302,7 @@ class SparkEvaluator:
             bc.unpersist()
         eval_s = [e for _ids, _vals, e in parts]
         self.s_per_point = sum(eval_s) / n
-        self.fixed_s = max(1e-6, wall_s - max(eval_s))
+        self.fixed_s = (*self.fixed_s[-1:], max(1e-6, wall_s - max(eval_s)))
         costs: list[float] = [math.nan] * n
         for ids, vals, _e in parts:
             for i, v in zip(ids.tolist(), vals.tolist()):

@@ -10,7 +10,12 @@ you'd also want on a 1000-executor cluster reading 100 TB:
   coalescing makes the static number mostly irrelevant;
 * Arrow enabled for every Python<->JVM hop (pandas UDFs, toPandas);
 * session timezone pinned to UTC so timestamp semantics match the DuckDB
-  oracle regardless of host timezone.
+  oracle regardless of host timezone;
+* Python workers forked from ``worker_daemon`` (``spark.python.daemon.module``),
+  whose zip importers re-read ``pyspark.zip`` and the Spark jar only when
+  they changed: PySpark's per-task ``importlib.invalidate_caches()`` would
+  otherwise re-read both archives' central directories in every partition
+  of every Python stage (about 0.25 s of CPU per task on a 4-core box).
 """
 
 from __future__ import annotations
@@ -20,6 +25,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the value of ``spark.python.daemon.module``; tools that build their own
+# session set it too, so their stage CPU readings match the engine's
+WORKER_DAEMON_MODULE = "dask_patternsearch_spark.worker_daemon"
 
 
 def get_spark(app_name: str = "dask-patternsearch-spark", cpus: str | None = None) -> SparkSession:
@@ -60,6 +68,7 @@ def get_spark(app_name: str = "dask-patternsearch-spark", cpus: str | None = Non
         # One forced GC per minute keeps block cleanup bounded.
         .config("spark.cleaner.periodicGC.interval", "60s")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
 

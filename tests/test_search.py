@@ -260,9 +260,9 @@ def test_pipelined_serial_fuses_rounds_per_evaluate_call():
 
 @pytest.mark.spark
 def test_spark_evaluator_sizes_tasks_by_measured_cost(spark):
-    """The first job of a search has ``min(n, defaultParallelism)`` tasks;
-    later jobs size themselves from the previous job's measured objective
-    and fixed cost: a cheap objective drops to one task per job (with the
+    """The first two jobs of a search have ``min(n, defaultParallelism)``
+    tasks; later jobs size themselves from the measured objective and
+    fixed cost: a cheap objective drops to one task per job (with the
     same ledger), a costly one keeps every core, and an explicit
     ``batchsize`` keeps ``ceil(n / batchsize)``."""
     import math
@@ -305,7 +305,7 @@ def test_spark_evaluator_sizes_tasks_by_measured_cost(spark):
 
     cheap, sizes, tasks = run("sizing-cheap", obj_vec, vectorize=True,
                               round_size=6, stopratio=0.05)
-    assert tasks == [min(sizes[0], par)] + [1] * (len(tasks) - 1)
+    assert tasks == [min(n, par) for n in sizes[:2]] + [1] * (len(tasks) - 2)
     _sb, serial = search(sphere, X0, STEP, seed=7, round_size=6, stopratio=0.05)
     assert canon(cheap) == canon(serial)
 
@@ -322,6 +322,59 @@ def test_spark_evaluator_sizes_tasks_by_measured_cost(spark):
                            vectorize=True, round_size=48, max_tasks=9)
     assert tasks == [math.ceil(n / 16) for n in sizes]
     assert all(t == 3 for t in tasks)
+
+
+def test_spark_evaluator_cold_first_job_does_not_size_the_next():
+    """The first job on a fresh session also starts the Python workers, so
+    its fixed cost reads far above a warm job's.  That reading alone must
+    not shrink the next call of a costly objective to one task; from the
+    third call on, sizing takes the smaller of the last two fixed costs."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dask_patternsearch_spark.search import SparkEvaluator
+
+    class Job:
+        def __init__(self, sc, n, k):
+            self.sc, self.n, self.k = sc, n, k
+
+        def mapPartitions(self, run):
+            self.run = run
+            return self
+
+        def collect(self):
+            self.sc.parts.append(self.k)
+            if len(self.sc.parts) == 1:
+                time.sleep(1.0)  # worker start-up, paid by the first job only
+            splits = [range(i * self.n // self.k, (i + 1) * self.n // self.k)
+                      for i in range(self.k)]
+            with ThreadPoolExecutor(self.k) as pool:
+                outs = pool.map(lambda r: list(self.run(iter(r))), splits)
+                return [row for out in outs for row in out]
+
+    class Context:
+        defaultParallelism = 4
+
+        def __init__(self):
+            self.parts = []
+
+        def parallelize(self, rng, k):
+            return Job(self, len(rng), k)
+
+    class Session:
+        sparkContext = Context()
+
+    def slow(x):
+        time.sleep(0.05)
+        return float((x * x).sum())
+
+    ev = SparkEvaluator(Session())
+    points = [np.full(2, float(i)) for i in range(8)]
+    for _ in range(3):
+        assert ev.evaluate(slow, points, ()) == [slow(p) for p in points]
+    # 8 points x 0.05 s against the cold job's 1 s of fixed cost would
+    # have sized the second call at floor(0.4 / 1.0) -> 1 task
+    assert Session.sparkContext.parts == [4, 4, 4]
 
 
 @pytest.mark.spark

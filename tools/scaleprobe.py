@@ -260,6 +260,8 @@ def _build_session(app_name: str, master: str = "local[32]"):
     behavior, not timings: local[1] makes the warmup deterministic."""
     from pyspark.sql import SparkSession
 
+    from dask_patternsearch_spark.session import WORKER_DAEMON_MODULE
+
     spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -275,6 +277,7 @@ def _build_session(app_name: str, master: str = "local[32]"):
         .config("spark.cleaner.periodicGC.interval", "60s")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4090")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

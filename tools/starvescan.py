@@ -47,6 +47,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from dask_patternsearch_spark.queries import all_queries
+    from dask_patternsearch_spark.session import WORKER_DAEMON_MODULE
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -58,6 +59,7 @@ def main() -> None:
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4095")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
