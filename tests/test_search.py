@@ -371,7 +371,7 @@ def test_spark_evaluator_cold_first_job_does_not_size_the_next():
     ev = SparkEvaluator(Session())
     points = [np.full(2, float(i)) for i in range(8)]
     for _ in range(3):
-        assert ev.evaluate(slow, points, ()) == [slow(p) for p in points]
+        assert ev.evaluate(slow, points, ()) == [float((p * p).sum()) for p in points]
     # 8 points x 0.05 s against the cold job's 1 s of fixed cost would
     # have sized the second call at floor(0.4 / 1.0) -> 1 task
     assert Session.sparkContext.parts == [4, 4, 4]
