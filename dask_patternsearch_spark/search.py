@@ -226,6 +226,9 @@ class SparkEvaluator:
     costs beyond evaluation -- scheduling, shipping the closure and the
     results, and the Python worker's per-task set-up, which
     ``worker_daemon`` keeps from re-reading Spark's zip archives).  The
+    worker's ``gc.collect()`` after each task runs once the result is
+    sent, so it costs CPU but not ``fixed_s``; ``worker_daemon`` freezes
+    its heap, so that collection skips what the worker inherited.  The
     first two calls use ``min(n_candidates, defaultParallelism)`` tasks;
     each later call uses ``floor(n_candidates * s_per_point / fixed_s)``
     within ``[1, that cap]``, with the last call's ``s_per_point`` and the

@@ -16,6 +16,9 @@ you'd also want on a 1000-executor cluster reading 100 TB:
   they changed: PySpark's per-task ``importlib.invalidate_caches()`` would
   otherwise re-read both archives' central directories in every partition
   of every Python stage (about 0.25 s of CPU per task on a 4-core box).
+  The daemon also freezes its heap (``gc.freeze()``) before it forks, so
+  the ``gc.collect()`` a reused worker runs after every task skips the
+  ~39,000 objects inherited from it.
 """
 
 from __future__ import annotations

@@ -1004,6 +1004,15 @@ LEDGER_CONFIGS = {
     "max_tasks_d2": (sphere, X0, STEP, {"max_tasks": 25, "pipeline_depth": 2}),
     "min_new_submit_d3": (sphere, X0, STEP,
                           {"min_new_submit": 8, "pipeline_depth": 3}),
+    # the benchmark's driver-bound shape (``sphere100_serial``): 305 rounds
+    # of 300 points, where a block round fill would change the most
+    "sphere100_batch_vec": (sphere_vectorized,
+                            np.linspace(1.0, 2.0, 100) * 0.25 * np.tile([1.0, -1.0], 50),
+                            np.ones(100),
+                            {"batchsize": 300, "vectorize": True, "stopratio": 1e-2}),
+    # fewer stencil steps per epoch than the 2 * dims poll directions
+    "max_stencil_size": (sphere, X0, STEP, {"max_stencil_size": 3}),
+    "no_randomize": (sphere, X0, STEP, {"randomize": False}),
 }
 
 # recorded from the search loop before it was guarded; a change that
@@ -1014,13 +1023,16 @@ LEDGER_FINGERPRINTS = {
     "bounds_d2": "2a36f3215dda6cf23f47d4238daa25f0a4558042",
     "integer_d1": "e854aa091b3138fca5585a4f3900361b88e93024",
     "integer_d3": "fdf0643a1e57f08e9c423d5a3d3169f0931851fc",
+    "max_stencil_size": "3aeadbdda3ea0e30915eea3c9a0bc3dad2dba6fe",
     "max_tasks_d2": "40cd8ca36c88f80f27401e4b57f7f75532879fec",
     "min_new_submit_d3": "85020a93a32f67f011f46d27435b863cda229372",
+    "no_randomize": "310b1a3e07d020af804fba550bced88f8708dae8",
     "rosen_d1": "7c51853829f7914b00d4cf16383c18ab05cef173",
     "rosen_d3": "d77c8076b617d1ee31cfd91698773c90f6bf7c32",
     "sphere_d1": "e33257be13e6397290bad52e07f4f65ab12b93cb",
     "sphere_d2": "f7af20d56a25103fef335bf1bce1d32e51c284b2",
     "sphere_d3": "9d7a0eb8e5456db2639f0d40218775a143a3c08a",
+    "sphere100_batch_vec": "3176f6a53f03adce6b01c982dd88dc3b58b5f680",
 }
 
 

@@ -1,7 +1,9 @@
 """The worker daemon's zip importers: an archive is re-read by
 ``invalidate_caches()`` only when it changed, the hook falls back to the
 plain PySpark daemon when it cannot be installed, and on the session every
-task runs with the patched importers."""
+task runs with the patched importers.  The daemon's heap is frozen before
+``manager()`` on both paths, so a task's garbage collector walks only what
+the worker made after the fork."""
 
 import importlib
 import os
@@ -95,11 +97,13 @@ def test_install_changes_nothing_when_an_importer_cannot_be_rebuilt(tmp_path, mo
 def _run_daemon_main(tmp_path, prelude):
     """Run ``worker_daemon.main()`` in a fresh interpreter whose path holds
     a zip that it imports from first, with ``pyspark.daemon.manager``
-    replaced by a stub that prints what the forked workers would get."""
+    replaced by a stub that prints what the forked workers would get: the
+    zip importer kinds, the zip hooks, whether any object is frozen and
+    whether the collector is still enabled."""
     archive = str(tmp_path / "pre.zip")
     _write_zip(archive, {"wd_preloaded": 1})
     code = "\n".join([
-        "import sys, zipimport",
+        "import gc, sys, zipimport",
         "import wd_preloaded",
         prelude,
         "import pyspark.daemon",
@@ -108,7 +112,7 @@ def _run_daemon_main(tmp_path, prelude):
         "                    if isinstance(f, zipimport.zipimporter)})",
         "    hooks = [h.__name__ for h in sys.path_hooks",
         "             if isinstance(h, type) and issubclass(h, zipimport.zipimporter)]",
-        "    print('manager', kinds, hooks)",
+        "    print('manager', kinds, hooks, gc.get_freeze_count() > 0, gc.isenabled())",
         "pyspark.daemon.manager = manager",
         "from dask_patternsearch_spark import worker_daemon",
         "worker_daemon.main()",
@@ -121,12 +125,12 @@ def _run_daemon_main(tmp_path, prelude):
 def test_daemon_main_patches_importers_and_writes_nothing_to_stdout(tmp_path):
     out = _run_daemon_main(tmp_path, "")
     # the JVM reads the daemon's port from stdout: only manager() may write
-    assert out.stdout == "manager ['CachedZipImporter'] ['CachedZipImporter']\n"
+    assert out.stdout == "manager ['CachedZipImporter'] ['CachedZipImporter'] True True\n"
 
 
 def test_daemon_main_falls_back_without_a_zipimporter_hook(tmp_path):
     out = _run_daemon_main(tmp_path, "sys.path_hooks.remove(zipimport.zipimporter)")
-    assert out.stdout == "manager ['zipimporter'] []\n"
+    assert out.stdout == "manager ['zipimporter'] [] True True\n"
     assert "unpatched" in out.stderr
 
 
@@ -162,3 +166,35 @@ def test_tasks_reread_no_archive(spark):
     for reads, kinds in sc.parallelize(range(n), n).mapPartitions(probe).collect():
         assert reads == 0
         assert kinds and set(kinds) == {"CachedZipImporter"}
+
+
+@pytest.mark.spark
+def test_tasks_skip_the_daemons_frozen_heap(spark):
+    """A task's worker inherits the daemon's heap frozen, so the
+    ``gc.collect()`` PySpark runs after every task walks only the objects
+    made after the fork: under a thousand in an RDD task, against about
+    39,000 with an unfrozen daemon.  An Arrow (``mapInPandas``) task runs
+    in a worker forked from the same frozen daemon."""
+
+    def probe(_it):
+        import gc
+
+        yield gc.get_freeze_count(), len(gc.get_objects())
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    for frozen, tracked in sc.parallelize(range(n), n).mapPartitions(probe).collect():
+        assert frozen > 0
+        assert tracked < 1000
+
+    def arrow_probe(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    rows = spark.range(n).mapInPandas(arrow_probe, "frozen long").collect()
+    assert rows and all(r.frozen > 0 for r in rows)
